@@ -38,104 +38,78 @@ def entry(spark: SparkSession) -> DataFrame:
 # The driver records correctness rows for the FIRST 50 queries() entries
 # only; more queries have oracles than slots, so some must yield.
 #
-# Round-13 rotation (the standing alternation) per VERDICT r12 #1/#3/#4:
+# Rotation (the standing alternation): the 100 oracle-backed queries
+# split into two halves of 50 that take the window in turn. The half
+# below is the one green in CORRECTNESS_r13.json and CORRECTNESS_r14.json
+# (the same 50/50-green window both rounds, since the r14 list was not
+# rotated). It yields its slots, and the other 50, last green in r12,
+# fill the window. No new oracle has been added since r13, so the
+# census is still exactly the 2 x 50 two-round-freshness ceiling.
 #
-# - The 50 r12 greens (CORRECTNESS_r12.json keys, 50/50 green) yield
-#   their slots and enter _DEMOTED below.
-# - q14b_cube + q14c_grouping_sets RETIRE their individual oracles into
-#   the consolidated q14d_grouping_battery (the q12_set_ops pattern —
-#   both variants as op-tagged slices of one oracle row; the variants
-#   stay registered rows-only with a slice-equivalence test). Frees 2
-#   ceiling slots.
-# - x17b_surprisal_quartile_approx is PROMOTED into a freed slot: its
-#   GK cut points equal DuckDB quantile_disc exactly at driver SFs
-#   (eps*N < 1 — the sketch holds every sample), verified at
-#   sf0.001/0.01/0.1 (functions/retrieval.py docstring).
-#
-# Oracle census: 100 (r12) − 2 (q14b/q14c retired) + 1 (q14d)
-# + 1 (x17b) = 100 oracle-backed queries — exactly the 2 × 50
-# two-round-freshness ceiling, zero spare. Any new oracle-backed op
-# must either wait for a consolidation or replace a retiring oracle;
-# new r13 ops register rows-only with a local differential (the
-# d3b/t4b pattern).
-#
-# Window: priority = 100 − 50 demoted = 50 — the 48 r11 greens
-# returning from last round's _DEMOTED (50 minus the retired
-# q14b/q14c) plus the newly promoted q14d and x17b — exactly filling
-# the 50 driver slots.
-#
-# Net effect: after r13 every oracle-backed query holds a green driver
-# row from r12 or r13. Machine-asserted by tests/test_coverage_counts.py::
-# test_rotation_freshness. Every demoted query remains fully
-# registered and oracle-checked locally each session
-# (tests/test_oracle_queries.py).
+# Machine-asserted by tests/test_coverage_counts.py::test_rotation_freshness:
+# every oracle-backed query is either in the window or green in the two
+# latest CORRECTNESS files. Every demoted query stays registered and
+# oracle-checked locally each session (tests/test_oracle_queries.py).
 _DEMOTED = [
-    # Reference r-series ops green r12; the returning r-series
-    # siblings re-verify the family (entry() smoke-runs r3 every
-    # driver pass regardless of the window).
-    "r3_series_minute",
-    "r4_sliding_window",
-    "r8_rolling_median",
-    "r11_kpi_latest_per_key",
-    # Join/scan family green r12; returning q01/q07/q22/q31 re-verify.
-    "q02_join_segment",
-    "q03_multiway_join",
-    "q03b_filtered_multiway",
-    "q04_orders_histogram",
-    "q05_semi_join",
-    "q06_anti_join",
-    "q08_broadcast_join",
-    # Windows/ranking green r12; returning q09/q09b re-verify.
-    "q10_analytic_window",
-    "q11_topk",
-    "q33_time_range_window",
-    # Grouping / distinct / pivot green r12; returning q12/q28 and the
-    # NEW consolidated q14d re-verify the family.
-    "q13_count_distinct",
-    "q14_rollup",
-    "q27_pivot",
-    # Scalar/date/profile battery green r12; returning q15-q21/q23/
-    # q29/q30/q34-q36/q38 relatives re-verify.
-    "q20_date_shift",
-    "q32_ewma_trend",
-    "q37_profile",
-    "q39_group_share",
-    "q40_merge_upsert",
-    "q41_stat_aggregates",
-    # Sampling green r12; returning q26b/q26c re-verify.
-    "x23_weighted_priority_sample",
-    # Dedup/documents green r12; returning d2/d3b/x24 hold the family.
-    "q24_dedup_exact",
-    "d1_dedup_docs_exact",
-    "d3_substring_dup_spans",
-    "d4_canonical_representative",
-    "t7_chunk_dedup",
-    "t8_fuzzy_dedup",
-    # Similarity green r12.
-    "x3_cosine_topk",
-    # Text/quality green r12; returning t5/t6b re-verify; the NEW
-    # x17b joins the window alongside its demoted exact sibling x17.
-    "q25_text_stats",
-    "q25b_top_tokens",
-    "t1_lang_id",
-    "t2_quality_score",
-    "t3_token_counts",
-    "t4b_fingerprint_winnow",
-    "t6_repetition",
-    "t9_bm25_search",
-    "x16_bm25_topk",
-    "x17_unigram_surprisal",
-    "x19_bigram_surprisal",
-    "x19b_bigram_surprisal_capped",
-    # Multimodal/pipeline green r12; returning x10/x25/x28-x30
-    # re-verify.
-    "x4_multimodal_roundtrip",
-    "x5_train_split",
-    "x6_sequence_pack",
-    "x7_embedding_quantize",
-    "x8_decontaminate",
-    "x9_source_mixing",
-    "x18_chunk_overlap",
+    # Reference r-series ops; the returning r3/r4/r8/r11 re-verify the
+    # family (entry() smoke-runs r3 on every pass regardless).
+    "r1_project_filter",
+    "r2_keyed_agg",
+    "r5_percentile_cont",
+    "r6_percentile_rank",
+    "r7_rolling_zscore",
+    "r8b_rolling_mad",
+    "r9_alerts_scan",
+    "r10_conditional_agg",
+    "r12_relative_time",
+    "r13_json_extract",
+    "r13b_variant_json",
+    "r14_severity_case",
+    "r15_cooldown_dedup",
+    "r16_alertmanager_ingest",
+    # Relational: joins, windows, grouping, sampling, set ops; the
+    # returning q02-q08/q10-q14/q27 relatives re-verify.
+    "q01_pricing_summary",
+    "q07_theta_self_join",
+    "q09_ranking_window",
+    "q09b_analytic_funcs",
+    "q12_set_ops",
+    "q14d_grouping_battery",
+    "q26b_hash_sample",
+    "q26c_stratified_sample",
+    "q28_unpivot",
+    # Scalar/date/profile battery; the returning q20/q32/q37/q39-q41
+    # relatives re-verify.
+    "q15_correlated_subquery",
+    "q16_string_funcs",
+    "q17_in_between",
+    "q18_having",
+    "q19_null_handling",
+    "q20b_date_diff_buckets",
+    "q21_array_explode",
+    "q22_asof_prior_click",
+    "q23_sessionization",
+    "q29_gapfill_series",
+    "q30_recursive_hierarchy",
+    "q31_lateral_topk",
+    "q34_funnel",
+    "q35_scd2",
+    "q36_cohort_retention",
+    "q38_quality_checks",
+    # Dedup/documents; the returning q24/d1/d3/d4/t7/t8 hold the family.
+    "d2_jaccard_scoring",
+    "d3b_substring_dedup_clip",
+    "x24_cross_source_contamination",
+    # Text/quality; the returning t1-t4b/t6/t9/x16/x17/x19 re-verify.
+    "t5_pii_scrub",
+    "t6b_gopher_rules",
+    "x17b_surprisal_quartile_approx",
+    # Pipeline/curation; the returning x4-x9/x18 re-verify.
+    "x10_curation_funnel",
+    "x25_dsir_resample",
+    "x28_source_token_budget",
+    "x29_temperature_resample",
+    "x30_shard_manifest",
 ]
 
 

@@ -24,6 +24,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_WORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker")
+
 
 class SessionFactory:
     """Build a SparkSession tuned for this engine.
@@ -45,15 +47,22 @@ class SessionFactory:
             .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
             .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            # Spark 4.1 leaves worker reuse off unless set: every
-            # Python-evaluating task then forks a fresh daemon child
-            # (~30-70 ms each, measured — a 32-task Arrow stage pays
-            # ~1-2 s of pure fork). With reuse on, released workers go
-            # back to the pool and repeated Python stages (IRLS/Lloyd
-            # iterations, decode passes, scorers) run on warm workers.
-            # Equally right on a 1000-executor cluster — reuse is the
-            # guide's §4.5 assumption for amortizing per-task init.
+            # Python worker cost per task, measured with
+            # scripts/worker_task_cost.py (4-core VM, trivial
+            # mapPartitions): 130-210 ms of worker CPU with the stock
+            # pyspark.worker, because Spark's importlib.invalidate_caches()
+            # at each task start re-reads the directory of every zip on
+            # sys.path (pyspark.zip, the spark-core jar). The _worker
+            # module keeps unchanged archives cached: 15-25 ms per task.
+            # A worker still reads each archive once on its first task,
+            # so the saving needs reuse, which keeps workers across tasks.
+            # The module is importable only through the executor
+            # PYTHONPATH (Spark merges it with the env PYTHONPATH the
+            # protobuf shim uses); if its import fails the daemon dies
+            # and every Python task fails loudly.
             .config("spark.python.worker.reuse", "true")
+            .config("spark.python.worker.module", "pyspark_zipcache_worker")
+            .config("spark.executorEnv.PYTHONPATH", _WORKER_DIR)
             .config("spark.sql.parquet.filterPushdown", "true")
             .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
             .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
