@@ -396,20 +396,34 @@ _MED_DUCK = (
     """,
 )
 def r8b_rolling_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-99, 0)
-    )
-    framed = events.select(
+    scored = rolling_mad_scores(load(spark, sf_dir, "events"), "event_type", "value")
+    return scored.select(
         "event_id",
         "event_type",
         "value",
+        round2("z").alias("z"),
+        round2("mad_score").alias("mad_score"),
+        "anomaly_type",
+        "severity",
+    ).orderBy("event_id")
+
+
+def rolling_mad_scores(events: DataFrame, key: str, value: str) -> DataFrame:
+    """R8b's scorer over any event frame: per ``key``, a 100-row frame in
+    (ts, event_id) order, scored once it holds at least 10 rows. Returns
+    (event_id, key, ts, value, z, mad_score, anomaly_type, severity,
+    is_anomaly) with z and mad_score unrounded. Also the batch oracle of
+    the streaming anomaly scorer (streaming/anomaly.py)."""
+    w = Window.partitionBy(key).orderBy("ts", "event_id").rowsBetween(-99, 0)
+    framed = events.select(
+        "event_id",
+        key,
+        "ts",
+        F.col(value).alias("value"),
         F.count("*").over(w).alias("cnt"),
-        F.avg("value").over(w).alias("mean"),
-        F.stddev_pop("value").over(w).alias("sd"),
-        F.sort_array(F.collect_list("value").over(w)).alias("vals"),
+        F.avg(value).over(w).alias("mean"),
+        F.stddev_pop(value).over(w).alias("sd"),
+        F.sort_array(F.collect_list(value).over(w)).alias("vals"),
     ).where(F.col("cnt") >= 10)
     med1 = framed.withColumn("med", F.expr(_MED_SPARK.format(a="vals", n="cnt")))
     med2 = med1.withColumn(
@@ -425,7 +439,8 @@ def r8b_rolling_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = med2.select(
         "event_id",
-        "event_type",
+        key,
+        "ts",
         "value",
         z.alias("z"),
         quant6(z).alias("zq"),
@@ -445,15 +460,17 @@ def r8b_rolling_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise("info")
     return scored.select(
         "event_id",
-        "event_type",
+        key,
+        "ts",
         "value",
-        round2("z").alias("z"),
-        round2("mad_score").alias("mad_score"),
+        "z",
+        "mad_score",
         F.when(is_z, "z-score").when(is_mad, "mad").otherwise("normal").alias(
             "anomaly_type"
         ),
         sev.alias("severity"),
-    ).orderBy("event_id")
+        (is_z | is_mad).alias("is_anomaly"),
+    )
 
 
 # ---------------------------------------------------------------------------

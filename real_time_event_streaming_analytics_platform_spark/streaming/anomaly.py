@@ -17,6 +17,10 @@ stateful stage: per (source, severity), suppress alerts within the
 cooldown interval of the last notification — event-time based, so
 replays are deterministic (S5).
 
+This module is the only implementation of both operators.
+streaming/state_v2.py reuses `_score_rows` solely for the initialState
+warm-start, which the v1 API cannot express.
+
 Topology note: Spark allows ONE applyInPandasWithState per streaming
 query, so anomaly scoring and cooldown run as two chained queries with a
 table between them — the same process split the reference uses (anomaly
@@ -115,10 +119,10 @@ def _concat_nonempty(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
 
 
 def _score_rows(source: str, vals: list[float], rows: pd.DataFrame) -> dict:
-    """Shared core of both stateful twins (applyInPandasWithState and
-    transformWithStateInPandas): advance the rolling deque over one
-    micro-batch's rows (mutating ``vals`` in place — the caller
-    persists it to state) and return the scored output columns."""
+    """Advance the rolling deque over one micro-batch's rows (mutating
+    ``vals`` in place — the caller persists it to state) and return the
+    scored output columns. Used by anomaly_stream and by the warm-start
+    processor in streaming/state_v2.py."""
     # deterministic intra-batch order (SURVEY.md §7.3(2))
     rows = rows.sort_values(["ts", "event_id"])
     out = {c: [] for c in ANOMALY_SCHEMA.fieldNames()}
@@ -167,65 +171,24 @@ def anomaly_stream(parsed: DataFrame) -> DataFrame:
 
 
 def anomaly_batch_oracle(parsed: DataFrame) -> DataFrame:
-    """Batch window-frame mirror of the stateful processor (the r8b plan
-    over reference-shaped events: key=source, value=metric) — the S4
-    parity oracle. Same array-math median/MAD, same quantized-z
-    thresholds; two-pass mean/σ over the frame."""
-    from pyspark.sql import Window
+    """Batch window-frame mirror of the stateful processor — the S4
+    parity oracle: r8b's scorer over reference-shaped events
+    (key=source, value=metric), unrounded. Same array-math median/MAD,
+    same quantized-z thresholds; two-pass mean/σ over the frame."""
     from pyspark.sql import functions as F
 
-    med_expr = (
-        "CASE WHEN {n} % 2 = 0 THEN (element_at({a}, CAST({n} div 2 AS INT)) "
-        "+ element_at({a}, CAST({n} div 2 AS INT) + 1)) / 2.0 "
-        "ELSE element_at({a}, CAST({n} div 2 AS INT) + 1) END"
-    )
-    w = (
-        Window.partitionBy("source")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-(ROLLING_WINDOW - 1), 0)
-    )
-    framed = parsed.select(
-        "event_id",
-        "source",
-        "ts",
-        F.col("metric").alias("value"),
-        F.count("*").over(w).alias("cnt"),
-        F.avg("metric").over(w).alias("mean"),
-        F.stddev_pop("metric").over(w).alias("sd"),
-        F.sort_array(F.collect_list("metric").over(w)).alias("vals"),
-    ).where(F.col("cnt") >= MIN_EVENTS)
-    med1 = framed.withColumn("med", F.expr(med_expr.format(a="vals", n="cnt")))
-    med2 = med1.withColumn(
-        "mad",
-        F.expr(med_expr.format(a="array_sort(transform(vals, x -> abs(x - med)))", n="cnt")),
-    )
-    z = F.when(F.col("sd") > 0, (F.col("value") - F.col("mean")) / F.col("sd")).otherwise(
-        F.lit(0.0)
-    )
-    zq = F.abs(F.floor(z * 1000000 + F.lit(0.5)) / 1000000)
-    mad_score = F.when(
-        F.col("mad") > 0, F.abs(F.col("value") - F.col("med")) / F.col("mad")
-    ).otherwise(F.lit(0.0))
-    is_z = zq > Z_THRESHOLD
-    is_mad = mad_score > MAD_THRESHOLD
-    sev = F.when(
-        is_z | is_mad,
-        F.when((zq > 4.0) | (mad_score > 4.0), "critical")
-        .when((zq > 3.5) | (mad_score > 3.5), "warning")
-        .otherwise("info"),
-    ).otherwise("info")
-    return med2.select(
+    from ..operators.reference import rolling_mad_scores
+
+    return rolling_mad_scores(parsed, "source", "metric").select(
         "event_id",
         "source",
         "ts",
         "value",
-        z.alias("z_score"),
-        mad_score.alias("mad_score"),
-        F.when(is_z, "z-score").when(is_mad, "mad").otherwise("normal").alias(
-            "anomaly_type"
-        ),
-        sev.alias("severity"),
-        (is_z | is_mad).alias("is_anomaly"),
+        F.col("z").alias("z_score"),
+        "mad_score",
+        "anomaly_type",
+        "severity",
+        "is_anomaly",
     )
 
 
@@ -258,33 +221,6 @@ _COOLDOWN_STATE = StructType(
 )
 
 
-def _cooldown_rows(
-    source: str,
-    severity: str,
-    last: float | None,
-    suppressed: int,
-    rows: pd.DataFrame,
-) -> tuple[dict, float | None, int]:
-    """Shared core of both cooldown twins: advance the (last emission
-    epoch, suppressed tally) state over one micro-batch's rows and
-    return (output columns, new last, new suppressed)."""
-    rows = rows.sort_values(["ts", "event_id"])
-    out = {c: [] for c in _COOLDOWN_OUT.fieldNames()}
-    for r in rows.itertuples(index=False):
-        epoch = r.ts.timestamp()
-        if last is not None and (epoch - last) < COOLDOWN_SECONDS:
-            suppressed += 1
-            continue
-        out["source"].append(source)
-        out["severity"].append(severity)
-        out["event_id"].append(r.event_id)
-        out["ts"].append(r.ts)
-        out["suppressed_since_last"].append(suppressed)
-        suppressed = 0
-        last = epoch
-    return out, last, suppressed
-
-
 def _cooldown(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
     if state.exists:
         last, suppressed = state.get[0], int(state.get[1] or 0)
@@ -294,7 +230,20 @@ def _cooldown(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[
     if rows is None:
         yield pd.DataFrame({c: [] for c in _COOLDOWN_OUT.fieldNames()})
         return
-    out, last, suppressed = _cooldown_rows(key[0], key[1], last, suppressed, rows)
+    rows = rows.sort_values(["ts", "event_id"])
+    out = {c: [] for c in _COOLDOWN_OUT.fieldNames()}
+    for r in rows.itertuples(index=False):
+        epoch = r.ts.timestamp()
+        if last is not None and (epoch - last) < COOLDOWN_SECONDS:
+            suppressed += 1
+            continue
+        out["source"].append(key[0])
+        out["severity"].append(key[1])
+        out["event_id"].append(r.event_id)
+        out["ts"].append(r.ts)
+        out["suppressed_since_last"].append(suppressed)
+        suppressed = 0
+        last = epoch
     # `last` cannot be None here: a non-empty batch with no prior state
     # always emits its first row (no NaN sentinel needed — storing one
     # would make the cooldown comparison depend on NaN semantics).

@@ -8,10 +8,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from real_time_event_streaming_analytics_platform_spark.session import SessionFactory
 
 # Imported BEFORE any fixture builds the SparkSession: state_v2's
-# module-level ensure_protobuf() exports the protobuf-shim PYTHONPATH,
-# which only reaches the JVM's Python children (the state-v2 driver
-# worker, daemon-forked executor workers) if it's in the environment
-# when the JVM launches. See state_v2.py's module doc.
+# module-level ensure_protobuf() applies _pbshim/sitecustomize.py and,
+# when the vendored protobuf runtime is in use, exports the shim's
+# PYTHONPATH. That export only reaches the JVM's Python children (the
+# state-v2 driver worker, daemon-forked executor workers) if it is in the
+# environment when the JVM launches. See state_v2.ensure_protobuf.
 from real_time_event_streaming_analytics_platform_spark.streaming import (  # noqa: E402,F401
     state_v2 as _state_v2_shim,
 )

@@ -1,12 +1,12 @@
-"""S4b — transformWithStateInPandas (state API v2) twin of the anomaly
-processor, run end-to-end through the v2 runtime (RocksDB state store +
-the protobuf state-server protocol) and checked for parity against BOTH
-the v1 applyInPandasWithState twin and the batch window-frame oracle.
+"""State API v2 (transformWithStateInPandas) operators, run end-to-end
+through the v2 runtime (RocksDB state store + the protobuf state-server
+protocol): initialState warm-start against a v1 replay (S25), event-time
+timers (S24), MapState (S26), ListState (S28) and running quantiles
+(S33).
 
 Skips with the exact blocker string when no usable protobuf runtime
-exists (state_v2.PROTOBUF_BLOCKER) — the previous rounds' standing gap;
-see state_v2.py's module doc for how the vendored runtime is shimmed
-in this sandbox."""
+exists (state_v2.PROTOBUF_BLOCKER); _pbshim/sitecustomize.py documents
+how a vendored runtime is used when no protobuf wheel is installed."""
 
 import shutil
 import tempfile
@@ -20,10 +20,7 @@ from real_time_event_streaming_analytics_platform_spark.sources.fixtures import 
 )
 from real_time_event_streaming_analytics_platform_spark.streaming import state_v2
 from real_time_event_streaming_analytics_platform_spark.streaming.anomaly import (
-    COOLDOWN_SECONDS,
-    anomaly_batch_oracle,
     anomaly_stream,
-    cooldown_stream,
 )
 from real_time_event_streaming_analytics_platform_spark.streaming.entries import (
     parse_events,
@@ -58,168 +55,58 @@ def _canon(rows):
     )
 
 
-def test_s4b_state_v2_parity(spark, tmpdir):
-    events = generate_events(1500, seed=21, interval_ms=300, outlier_rate=0.08)
-    write_jsonl(events, f"{tmpdir}/in", n_files=3)
-
-    def parsed_stream():
-        return parse_events(
-            read_event_stream(spark, f"{tmpdir}/in", max_files_per_trigger=1),
-            require_positive_metric=True,
-        )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", state_v2.ROCKSDB_PROVIDER
-    )
-    try:
-        got_v2 = run_available_now(
-            state_v2.anomaly_stream_v2(parsed_stream()),
-            f"{tmpdir}/ck_v2",
-            output_mode="append",
-            name="s4b",
-        ).collect()
-        # multi-batch statefulness must actually have happened: with
-        # max_files_per_trigger=1 the deque crosses micro-batch
-        # boundaries, which is the v2 state round-trip under test
-        got_v1 = run_available_now(
-            anomaly_stream(parsed_stream()),
-            f"{tmpdir}/ck_v1",
-            output_mode="append",
-            name="s4b_v1",
-        ).collect()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-    raw = spark.read.text(f"{tmpdir}/in").withColumnRenamed("value", "raw")
-    expect = anomaly_batch_oracle(
-        parse_events(raw).where(F.col("metric") > 0)
-    ).collect()
-
-    assert len(got_v2) > 0
-    assert _canon(got_v2) == _canon(got_v1)
-    assert _canon(got_v2) == _canon(expect)
-
-
-def test_s5b_cooldown_v2_parity(spark, tmpdir):
-    """Cooldown dedup through the v2 runtime: same suppression
-    invariant as S5 (one notification per (source, severity) per
-    cooldown interval), plus exact row parity against the v1
-    applyInPandasWithState twin across multi-file micro-batches (the
-    suppressed tally must survive batch boundaries in v2 state)."""
-    events = generate_events(200, seed=31, interval_ms=30000)  # 30s apart
-    write_jsonl(events, f"{tmpdir}/in", n_files=4)
-
-    def alerts():
-        stream = parse_events(
-            read_event_stream(spark, f"{tmpdir}/in", max_files_per_trigger=1)
-        )
-        return stream.select(
-            "source", F.col("status").alias("severity"), "event_id", "ts"
-        )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", state_v2.ROCKSDB_PROVIDER
-    )
-    try:
-        got_v2 = run_available_now(
-            state_v2.cooldown_stream_v2(alerts()),
-            f"{tmpdir}/ck_v2",
-            output_mode="append",
-            name="s5b",
-        ).collect()
-        got_v1 = run_available_now(
-            cooldown_stream(alerts()),
-            f"{tmpdir}/ck_v1",
-            output_mode="append",
-            name="s5b_v1",
-        ).collect()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-    def canon(rows):
-        return sorted(
-            (r["source"], r["severity"], r["event_id"], r["ts"], r["suppressed_since_last"])
-            for r in rows
-        )
-
-    assert len(got_v2) > 0
-    assert canon(got_v2) == canon(got_v1)
-    by_key = {}
-    for r in sorted(got_v2, key=lambda r: r["ts"]):
-        by_key.setdefault((r["source"], r["severity"]), []).append(r["ts"])
-    for key, times in by_key.items():
-        for a, b in zip(times, times[1:]):
-            assert (b - a).total_seconds() >= COOLDOWN_SECONDS, (key, a, b)
-
-
 def test_s25_warmstart_initial_state_matches_full_replay(spark, tmpdir):
-    """initialState bootstrap: a stream warm-started from a batch
-    history frame must score the streamed rows EXACTLY as a stream
-    that replayed the whole history — the rolling deques continue where
-    the history left off (redeploy-without-replay, the savepoint-restore
-    story). Same 1500 events: full replay over 3 files vs history=first
-    500 (batch) + stream=last 1000 (2 files, 1 per trigger)."""
+    """initialState bootstrap, pinned across the two state APIs: a v2
+    stream warm-started from a batch history frame must score the
+    streamed rows EXACTLY as the v1 anomaly_stream replaying the whole
+    history — the rolling deques continue where the history left off
+    (redeploy-without-replay, the savepoint-restore story). Same 1500
+    events: v1 replay over 3 files vs history=first 500 (batch) +
+    v2 stream=last 1000 (2 files, 1 per trigger, so the ValueState deque
+    crosses micro-batches). The "kiosk" source appears only in the live
+    files: it has no initialState row and must start from an empty
+    deque."""
     all_events = generate_events(1500, seed=21, interval_ms=300, outlier_rate=0.08)
+    for e in all_events[500::20]:
+        e["source"] = "kiosk"
     write_jsonl(all_events, f"{tmpdir}/all", n_files=3)
     write_jsonl(all_events[:500], f"{tmpdir}/hist", prefix="hist")
     write_jsonl(all_events[500:], f"{tmpdir}/live", n_files=2, prefix="live")
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", state_v2.ROCKSDB_PROVIDER
-    )
-    try:
-        replay = run_available_now(
-            state_v2.anomaly_stream_v2(
-                parse_events(
-                    read_event_stream(spark, f"{tmpdir}/all", max_files_per_trigger=1),
-                    require_positive_metric=True,
-                )
-            ),
-            f"{tmpdir}/ck_replay",
-            output_mode="append",
-            name="s25_replay",
-        ).collect()
+    replay = run_available_now(
+        anomaly_stream(
+            parse_events(
+                read_event_stream(spark, f"{tmpdir}/all", max_files_per_trigger=1),
+                require_positive_metric=True,
+            )
+        ),
+        f"{tmpdir}/ck_replay",
+        output_mode="append",
+        name="s25_replay",
+    ).collect()
 
-        raw_hist = spark.read.text(f"{tmpdir}/hist").withColumnRenamed("value", "raw")
-        history = parse_events(raw_hist).where(F.col("metric") > 0)
-        warm = run_available_now(
-            state_v2.anomaly_stream_v2_warmstart(
-                parse_events(
-                    read_event_stream(spark, f"{tmpdir}/live", max_files_per_trigger=1),
-                    require_positive_metric=True,
-                ),
-                history,
+    raw_hist = spark.read.text(f"{tmpdir}/hist").withColumnRenamed("value", "raw")
+    history = parse_events(raw_hist).where(F.col("metric") > 0)
+    warm = run_available_now(
+        state_v2.anomaly_stream_v2_warmstart(
+            parse_events(
+                read_event_stream(spark, f"{tmpdir}/live", max_files_per_trigger=1),
+                require_positive_metric=True,
             ),
-            f"{tmpdir}/ck_warm",
-            output_mode="append",
-            name="s25_warm",
-        ).collect()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+            history,
+        ),
+        f"{tmpdir}/ck_warm",
+        output_mode="append",
+        name="s25_warm",
+    ).collect()
 
-    streamed_ids = {r["event_id"] for r in warm}
-    replay_tail = [r for r in replay if r["event_id"] in streamed_ids]
     assert len(warm) > 0
+    assert "kiosk" in {r["source"] for r in warm}
     # every streamed event scored in the replay must also be scored
     # warm (the bootstrap deque carries the history's MIN_EVENTS count)
-    replay_live_ids = {
-        r["event_id"]
-        for r in replay
-        if any(r["event_id"] == e["event_id"] for e in all_events[500:])
-    }
-    assert streamed_ids == replay_live_ids
+    live_ids = {e["event_id"] for e in all_events[500:]}
+    replay_tail = [r for r in replay if r["event_id"] in live_ids]
+    assert {r["event_id"] for r in warm} == {r["event_id"] for r in replay_tail}
     assert _canon(warm) == _canon(replay_tail)
 
 
@@ -234,22 +121,12 @@ def test_s26_mapstate_distinct_users_matches_batch(spark, tmpdir):
     stream = parse_events(
         read_event_stream(spark, f"{tmpdir}/in", max_files_per_trigger=1)
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", state_v2.ROCKSDB_PROVIDER
-    )
-    try:
-        got = run_available_now(
-            state_v2.distinct_users_stream(stream),
-            f"{tmpdir}/ck",
-            output_mode="append",
-            name="s26",
-        ).collect()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    got = run_available_now(
+        state_v2.distinct_users_stream(stream),
+        f"{tmpdir}/ck",
+        output_mode="append",
+        name="s26",
+    ).collect()
 
     raw = spark.read.text(f"{tmpdir}/in").withColumnRenamed("value", "raw")
     expect = {
@@ -284,22 +161,12 @@ def test_s28_liststate_burst_escalation_matches_batch_oracle(spark, tmpdir):
         )
         return stream.select("source", "event_id", "ts")
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", state_v2.ROCKSDB_PROVIDER
-    )
-    try:
-        got = run_available_now(
-            state_v2.burst_escalation_stream(alerts()),
-            f"{tmpdir}/ck",
-            output_mode="append",
-            name="s28",
-        ).collect()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    got = run_available_now(
+        state_v2.burst_escalation_stream(alerts()),
+        f"{tmpdir}/ck",
+        output_mode="append",
+        name="s28",
+    ).collect()
 
     from pyspark.sql import Window
 
@@ -372,22 +239,12 @@ def test_s24_event_time_timer_detects_stale_source(spark, tmpdir):
     stream = parse_events(
         read_event_stream(spark, f"{tmpdir}/in", max_files_per_trigger=1)
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", state_v2.ROCKSDB_PROVIDER
-    )
-    try:
-        got = run_available_now(
-            state_v2.stale_source_stream(stream),
-            f"{tmpdir}/ck",
-            output_mode="append",
-            name="s24",
-        ).collect()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    got = run_available_now(
+        state_v2.stale_source_stream(stream),
+        f"{tmpdir}/ck",
+        output_mode="append",
+        name="s24",
+    ).collect()
 
     assert len(got) == 1, got
     row = got[0]
@@ -426,18 +283,8 @@ def test_s33_running_quantiles_matches_exact_and_split_invariant(spark, tmpdir):
             name=name,
         ).collect()
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", state_v2.ROCKSDB_PROVIDER
-    )
-    try:
-        got = run(1, "s33a", f"{tmpdir}/ck1")
-        got_one = run(3, "s33b", f"{tmpdir}/ck2")
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    got = run(1, "s33a", f"{tmpdir}/ck1")
+    got_one = run(3, "s33b", f"{tmpdir}/ck2")
 
     raw = spark.read.text(f"{tmpdir}/in").withColumnRenamed("value", "raw")
     exact = {}
@@ -497,22 +344,12 @@ def test_s33c_asof_monotone_under_late_arrivals(spark, tmpdir):
     stream = parse_events(
         read_event_stream(spark, f"{tmpdir}/in", max_files_per_trigger=1)
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", state_v2.ROCKSDB_PROVIDER
-    )
-    try:
-        rows = run_available_now(
-            state_v2.running_quantiles_stream(stream),
-            f"{tmpdir}/ck",
-            output_mode="append",
-            name="s33c",
-        ).collect()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    rows = run_available_now(
+        state_v2.running_quantiles_stream(stream),
+        f"{tmpdir}/ck",
+        output_mode="append",
+        name="s33c",
+    ).collect()
 
     by_src: dict = {}
     for r in rows:
