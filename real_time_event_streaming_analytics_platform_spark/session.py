@@ -13,9 +13,30 @@ so every knob here is chosen to also make sense at that scale:
   multimodal decode) moves batches, never rows.
 - UTC session timezone: oracle comparisons and window math are
   timezone-proof.
+- One shuffle (and state-store) partition per core. Every stateful
+  operator loads, writes and commits every one of its state partitions on
+  every micro-batch, rows or not, so partitions beyond the cores only add
+  waves of commit-bound tasks; batch shuffles are sized at runtime by AQE
+  coalescing and skew splitting. A checkpoint keeps the partition count it
+  was started with (Spark restores it from the offset log).
 - RocksDB state store: streaming state (sliding windows, rolling anomaly
   stats, cooldown dedup) spills to disk instead of living on the JVM heap —
   required for per-key state at 100 TB ingest.
+- RocksDB changelog checkpointing: a micro-batch commit writes one
+  changelog file per state partition (the batch's puts and deletes)
+  instead of a RocksDB checkpoint, a zip upload and a clean-up of the
+  local checkpoint dir; snapshots move to the background maintenance
+  task. Existing checkpoints switch over in place.
+- FileSystem-based checkpoint file manager: Spark's default FileContext
+  manager resolves every path through ``getFileLinkStatus``, which on a
+  local file system without Hadoop's native library forks ``readlink``
+  per call, several times for every checkpoint file written
+  (``scripts/stream_commit_cost.py`` counts them). The FileSystem
+  manager checks that the target is absent and then renames (one
+  ``rename(2)`` on a local path). On a local path Hadoop's FileContext
+  rename does the same check-then-rename
+  (``AbstractFileSystem.renameInternal``), so the write-temp-then-rename
+  guarantee of the offset, commit and state logs is unchanged.
 """
 
 from __future__ import annotations
@@ -44,7 +65,7 @@ class SessionFactory:
             .config("spark.sql.adaptive.enabled", "true")
             .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
             .config("spark.sql.adaptive.skewJoin.enabled", "true")
-            .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
+            .config("spark.sql.shuffle.partitions", str(cpus))
             .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
             # Python worker cost per task, measured with
@@ -69,6 +90,15 @@ class SessionFactory:
             .config(
                 "spark.sql.streaming.stateStore.providerClass",
                 "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+            )
+            .config(
+                "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+                "true",
+            )
+            .config(
+                "spark.sql.streaming.checkpointFileManagerClass",
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager",
             )
             .config("spark.ui.enabled", "false")
             # saveAsTable target (bucketed tables); static conf, so it must

@@ -94,7 +94,9 @@ class EngineMetricsListener(StreamingQueryListener):
     streaming_processed_rows_per_second, streaming_batch_duration_ms,
     streaming_watermark_lag_seconds (event-time max − watermark, the
     freshness number an operator pages on), streaming_state_rows,
-    streaming_state_memory_bytes. All labeled {query=<name or id>}.
+    streaming_state_memory_bytes, streaming_state_commit_ms (state-store
+    commit time summed over the stateful operators). All labeled
+    {query=<name or id>}.
 
     Listener callbacks run off the query thread (and off the data
     path); a listener exception can never fail the stream.
@@ -143,9 +145,11 @@ class EngineMetricsListener(StreamingQueryListener):
                 pass
         rows = sum(s.numRowsTotal for s in p.stateOperators)
         mem = sum(s.memoryUsedBytes for s in p.stateOperators)
+        commit_ms = sum(s.commitTimeMs for s in p.stateOperators)
         if p.stateOperators:
             reg.set("streaming_state_rows", label, float(rows))
             reg.set("streaming_state_memory_bytes", label, float(mem))
+            reg.set("streaming_state_commit_ms", label, float(commit_ms))
 
     def onQueryIdle(self, event: QueryIdleEvent) -> None:
         pass

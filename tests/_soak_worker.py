@@ -52,11 +52,13 @@ def main() -> None:
         state_v2 as _state_v2_shim,
     )
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from real_time_event_streaming_analytics_platform_spark.serving.hotstore import (
         HotStore,
+    )
+    from real_time_event_streaming_analytics_platform_spark.session import (
+        SessionFactory,
     )
     from real_time_event_streaming_analytics_platform_spark.sources.synthetic import (
         register,
@@ -73,11 +75,13 @@ def main() -> None:
         MetricsRegistry,
     )
 
+    # the engine's own session, so the soak runs the state store the
+    # engine ships (RocksDB, changelog commits)
     spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("soak-worker")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
+        SessionFactory.builder("soak-worker", cpus=4)
+        # the worker runs beside the test session's JVM: Spark's default
+        # 1g heap, not the engine's 16g
+        .config("spark.driver.memory", "1g")
         # recentProgress is capped at 100 entries by default; a fast
         # machine runs >100 batches in the soak and the cap would
         # silently drop the RAMP third, degenerating the plateau

@@ -1,10 +1,13 @@
 """S-series streaming behavior tests (SURVEY.md §2c S1-S7):
 S1 watermark drops late data; S2 batch↔streaming aggregate parity;
-S3/S6 exactly-once file sink + checkpoint restart; S4 stateful anomaly
+S3/S6 exactly-once file sink + checkpoint restart; S3b a checkpoint from
+the previous session settings resumes exactly; S4 stateful anomaly
 parity with the batch window-frame oracle; S5 cooldown suppression;
 S7 session windows consistent with batch sessionization."""
 
+import glob
 import math
+import os
 import shutil
 import tempfile
 from datetime import timedelta
@@ -90,13 +93,16 @@ def test_s2_batch_stream_aggregate_parity(spark, tmpdir):
         name="s2",
     ).collect()
     batch_res = sliding_aggregates(_read_batch(spark, f"{tmpdir}/in")).collect()
+    _assert_agg_parity(stream_res, batch_res)
 
-    def keyed(rows):
-        return {
-            (r["window_start"], r["source"]): r for r in rows
-        }
 
-    s, b = keyed(stream_res), keyed(batch_res)
+def _keyed(rows):
+    return {(r["window_start"], r["source"]): r for r in rows}
+
+
+def _assert_agg_parity(stream_rows, batch_rows):
+    """Streaming sliding_aggregates rows == the batch plan's rows."""
+    s, b = _keyed(stream_rows), _keyed(batch_rows)
     assert set(s) == set(b)
     for k in s:
         assert s[k]["count_events"] == b[k]["count_events"], k
@@ -123,6 +129,59 @@ def test_s3_s6_checkpoint_exactly_once(spark, tmpdir):
     out = spark.read.parquet(f"{tmpdir}/out")
     assert out.count() == 150
     assert out.select("event_id").distinct().count() == 150
+
+
+def test_s3b_old_checkpoint_resumes_and_changelog_replay_is_exact(spark, tmpdir):
+    """A checkpoint written under the previous session settings (8 state
+    partitions, RocksDB changelog checkpointing off, the default
+    checkpoint file manager) resumes under the engine's settings, across
+    two restarts: the upserted result equals batch sliding_aggregates and
+    the state keeps its recorded 8 partitions. A fresh query commits one
+    state partition per core, through changelog files."""
+    events = generate_events(600, seed=31, interval_ms=500)
+    upserted: dict = {}
+
+    def upsert(df, _bid):
+        upserted.update(_keyed(df.collect()))
+
+    def drain(session, name, ck):
+        q = (
+            sliding_aggregates(
+                parse_events(read_event_stream(session, f"{tmpdir}/in", max_files_per_trigger=1))
+            )
+            .writeStream.queryName(name)
+            .foreachBatch(upsert)
+            .outputMode("update")
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return [p for p in q.recentProgress if p is not None]
+
+    old = spark.newSession()
+    old.conf.set("spark.sql.shuffle.partitions", "8")
+    old.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "false")
+    old.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
+    write_jsonl(events[:200], f"{tmpdir}/in", prefix="a")
+    drain(old, "s3b_old", f"{tmpdir}/ck")
+    assert not glob.glob(f"{tmpdir}/ck/state/0/*/*.changelog")
+
+    for prefix, chunk in (("b", events[200:400]), ("c", events[400:])):
+        write_jsonl(chunk, f"{tmpdir}/in", prefix=prefix)
+        progress = drain(spark, f"s3b_{prefix}", f"{tmpdir}/ck")
+        assert sum(p["numInputRows"] for p in progress) == 200
+        assert {o["numShufflePartitions"] for p in progress for o in p["stateOperators"]} == {8}
+    batch = sliding_aggregates(_read_batch(spark, f"{tmpdir}/in")).collect()
+    _assert_agg_parity(list(upserted.values()), batch)
+
+    upserted.clear()
+    drain(spark, "s3b_fresh", f"{tmpdir}/ck_fresh")
+    _assert_agg_parity(list(upserted.values()), batch)
+    parts = [d for d in os.listdir(f"{tmpdir}/ck_fresh/state/0") if d.isdigit()]
+    assert len(parts) == spark.sparkContext.defaultParallelism
+    for d in parts:
+        assert glob.glob(f"{tmpdir}/ck_fresh/state/0/{d}/*.changelog"), d
 
 
 def test_s4_stateful_anomaly_parity_with_batch_oracle(spark, tmpdir):
@@ -503,6 +562,9 @@ def test_s13_metrics_listener_matches_query_progress(spark, tmpdir):
         assert registry.get("streaming_state_rows", label) > 0
         lag = registry.get("streaming_watermark_lag_seconds", label)
         assert lag is not None and lag >= 0
+        # the commit-cost gauge is the latest batch's summed state commit
+        want_commit = sum(o["commitTimeMs"] for o in progress[-1]["stateOperators"])
+        assert registry.get("streaming_state_commit_ms", label) == want_commit
         text = registry.render()
         assert 'streaming_input_rows_total{query="s13_metrics"} 300' in text
     finally:
