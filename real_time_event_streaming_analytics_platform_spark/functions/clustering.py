@@ -48,6 +48,8 @@ from ..operators.helpers import round2
 KMEANS_K = 8
 KMEANS_MAX_ITERS = 10
 KMEANS_TOL = 1e-4
+# driver-side merge budget for Lloyd partials, in doubles (see kmeans_fit)
+KMEANS_DENSE_MAX = 30_000_000
 
 
 def _assign(emb: DataFrame, centers) -> DataFrame:
@@ -116,13 +118,8 @@ def kmeans_fit(
     # same per-partition statistics and differ only in float-add order
     # (covered by the replay test's ULP tolerance; each path is
     # individually deterministic — collect preserves partition order).
-    import os
-
     parts = vectors.rdd.getNumPartitions()
-    dense_budget = int(
-        os.environ.get("SPARK_GRAFT_KMEANS_DENSE_MAX", str(30_000_000))
-    )
-    dense = parts * k * (dim + 1) <= dense_budget
+    dense = parts * k * (dim + 1) <= KMEANS_DENSE_MAX
     it = 0
     for it in range(1, max_iters + 1):
         Cb = C.copy()

@@ -76,24 +76,19 @@ def track_persist(df: DataFrame) -> DataFrame:
 # scan size, not hard-coded for either regime (guide §5's "only when
 # recomputing is more expensive than the pressure caching creates",
 # applied adaptively).
-_PERSIST_MIN_BYTES_DEFAULT = 256 * 1024 * 1024
+PERSIST_MIN_BYTES = 256 * 1024 * 1024
 
 
 def adaptive_persist(df: DataFrame) -> DataFrame:
     """track_persist(df) when the frame's input scans exceed
-    SPARK_GRAFT_PERSIST_MIN_BYTES (default 256 MiB, read per call) on
-    disk; identity below that. Non-local, unlistable, or non-file-backed
-    inputs — empty ``inputFiles()``, object stores, streaming: the
-    production shapes — take the persist path: at that scale the avoided
-    re-scan always exceeds the cache constant."""
+    PERSIST_MIN_BYTES on disk (read per call, so a measurement can force
+    either side); identity below that. Non-local, unlistable, or
+    non-file-backed inputs — empty ``inputFiles()``, object stores,
+    streaming: the production shapes — take the persist path: at that
+    scale the avoided re-scan always exceeds the cache constant."""
     import os
     from urllib.parse import unquote, urlparse
 
-    min_bytes = int(
-        os.environ.get(
-            "SPARK_GRAFT_PERSIST_MIN_BYTES", str(_PERSIST_MIN_BYTES_DEFAULT)
-        )
-    )
     try:
         files = df.inputFiles()
         if not files:
@@ -108,7 +103,7 @@ def adaptive_persist(df: DataFrame) -> DataFrame:
             # inputFiles() returns percent-encoded URIs; unquote so
             # local paths with spaces/special chars stat correctly
             total += os.path.getsize(unquote(p.path))
-            if total > min_bytes:
+            if total > PERSIST_MIN_BYTES:
                 return track_persist(df)
         return df
     except Exception:

@@ -1,27 +1,28 @@
 #!/usr/bin/env python
-"""Scale evidence for the heavy operators (VERDICT r13 #3).
+"""Scale evidence for the heavy operators.
 
 At sf0.1 every bench entry is dominated by fixed per-job constants, so
-the 8-vs-32-core scaling block cannot evidence parallelism either way.
-This script extends the bench's replication pattern (deterministic id
-remaps + content perturbation, the same write_replicas recipe) to the
-top operators and measures each one at 32 AND 8 cores in FRESH
-subprocess sessions — a compute-bound parallel operator must show a
+an 8-vs-32-core comparison cannot evidence parallelism either way. This
+script builds bench.py's replicated fixture (``bench.write_replicas``:
+deterministic id remaps and content perturbation, many files per table)
+and measures the top operators at 32 AND 8 cores in FRESH subprocess
+sessions, each through ``bench.measure`` with results materialized by
+``bench.noop``. A compute-bound parallel operator must show a
 sec@8 / sec@32 ratio well above 1 (4.0 is the core-ratio ceiling).
 
 It also measures the adaptive_persist crossover ON BOTH SIDES of the
-256 MiB threshold (VERDICT r13 "What's wrong" #4: the above-threshold
-side was extrapolated, never measured): x12's shared token-explode
-subtree, interleaved persist-vs-identity in one session, at 1x (persist
-must lose — the measured r13 result) and at a replica multiple whose
-documents scan exceeds the threshold (persist must win).
+``plans.registry.PERSIST_MIN_BYTES`` gate: x12's shared token-explode
+subtree, interleaved persist-vs-identity in one session, at 1x and at a
+replica multiple whose documents scan exceeds the gate. The persist
+worker forces each arm by setting that constant in its own process.
 
 Writes SCALE_EVIDENCE_r14.json next to the repo root. Standalone by
-design — the driver's bench.py runtime and entry set stay untouched.
+design — bench.py's runtime and ``__spark_entry__``'s query set stay
+untouched.
 
 Usage:
   python scripts/scale_evidence.py            # full run (~20-30 min)
-  python scripts/scale_evidence.py --mult 20  # faster smoke
+  python scripts/scale_evidence.py --mult 2   # faster smoke
 Internal worker modes (spawned by the parent):
   ... worker  CPUS FIXTURE_DIR OUT_JSON
   ... persist FIXTURE_DIR_BIG OUT_JSON
@@ -31,16 +32,18 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
-import time
 
 _HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _HERE)
 
+from bench import measure, noop, write_replicas  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-# ops chosen by VERDICT r13 #3; x2_build is the candidate-index build
-# (the bench's own split), the rest are registered queries
+# x2_build is the candidate-index build (the bench's own split), the
+# rest are registered queries
 OPS = [
     "x25_dsir_resample",
     "x16_bm25_topk",
@@ -63,76 +66,6 @@ def _session(name: str, cpus: int):
     return spark
 
 
-FIXTURE_FILES = 64
-
-
-def _write_replicas(spark, dest: str, m: int, tables: set[str]) -> None:
-    """The bench's write_replicas recipe (deterministic id remaps +
-    content perturbation so dedup/ANN/langid do real work) — but written
-    as FIXTURE_FILES files. A replicated sf0.1 table lands at a few tens
-    of MB; written from the single-partition source it becomes ONE
-    parquet file, i.e. ONE scan task under the 128 MB split size, and
-    every downstream core-scaling ratio then measures the fixture's
-    layout, not the operator (the first run of this script showed
-    exactly that: ratios ~1.0-1.3 everywhere). A 100 TB table is
-    inherently many files, so many files is the representative layout."""
-    from pyspark.sql import functions as F
-
-    from real_time_event_streaming_analytics_platform_spark.catalog import load
-
-    rep = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("_rep")
-    big = F.col("_rep").cast("bigint")
-    if "documents" in tables:
-        docs = (
-            load(spark, SF_DIR, "documents")
-            .select("*", rep)
-            .withColumn(
-                "_text",
-                F.when(F.col("_rep") == 0, F.col("text")).otherwise(
-                    F.concat(
-                        F.col("text"),
-                        F.lit(" replica"),
-                        F.col("_rep").cast("string"),
-                    )
-                ),
-            )
-        )
-        (
-            docs.select(
-                (F.col("doc_id") + big * F.lit(10**9)).alias("doc_id"),
-                F.col("_text").alias("text"),
-                "lang",
-                "source",
-                F.length("_text").alias("n_chars"),
-            )
-            .repartition(FIXTURE_FILES)
-            .write.mode("overwrite")
-            .parquet(f"{dest}/documents.parquet")
-        )
-    if "embeddings" in tables:
-        emb = load(spark, SF_DIR, "embeddings").select("*", rep)
-        (
-            emb.select(
-                (F.col("vec_id") + big * F.lit(10**9)).alias("vec_id"),
-                F.transform(
-                    "embedding",
-                    lambda x: (x + F.col("_rep").cast("float") * F.lit(0.003)).cast(
-                        "float"
-                    ),
-                ).alias("embedding"),
-                "label",
-            )
-            .repartition(FIXTURE_FILES)
-            .write.mode("overwrite")
-            .parquet(f"{dest}/embeddings.parquet")
-        )
-    spark.catalog.clearCache()
-
-
-def _noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
 def worker(cpus: int, fixture: str, out_json: str) -> None:
     import real_time_event_streaming_analytics_platform_spark as engine
     from real_time_event_streaming_analytics_platform_spark.functions.dedup import (
@@ -145,73 +78,53 @@ def worker(cpus: int, fixture: str, out_json: str) -> None:
 
     spark = _session(f"scale-evidence-{cpus}c", cpus=cpus)
     res: dict = {"cpus": cpus}
-
-    def run(name: str) -> None:
-        if name == "x2_build":
-            clear_index_caches()
-            candidate_index(spark, fixture)
-        else:
-            _noop(engine.QUERIES[name](spark, fixture))
-
     for name in OPS:
-        release_tracked()
-        run(name)  # warm rep, discarded (fresh-session constants)
-        walls = []
-        for _ in range(2):
+
+        def run() -> None:
             release_tracked()
             if name == "x2_build":
                 clear_index_caches()
-            t0 = time.monotonic()
-            run(name)
-            walls.append(round(time.monotonic() - t0, 3))
-        res[name] = min(walls)
-        res[f"{name}_walls"] = walls
-        print(f"  [{cpus}c] {name}: {walls}", file=sys.stderr)
+                candidate_index(spark, fixture)
+            else:
+                noop(engine.QUERIES[name](spark, fixture))
+
+        res[name], res[f"{name}_walls"] = measure(run)
+        print(f"  [{cpus}c] {name}: {res[f'{name}_walls']}", file=sys.stderr)
     spark.stop()
     with open(out_json, "w") as f:
         json.dump(res, f)
 
 
 def persist_worker(fixture_big: str, out_json: str) -> None:
-    import statistics
-
     import real_time_event_streaming_analytics_platform_spark as engine
-    from real_time_event_streaming_analytics_platform_spark.plans.registry import (
-        release_tracked,
-    )
+    from real_time_event_streaming_analytics_platform_spark.plans import registry
 
     spark = _session("persist-crossover", cpus=32)
+    gate = registry.PERSIST_MIN_BYTES
     res: dict = {}
 
-    def timed(sf_dir: str, min_bytes: str | None) -> float:
-        if min_bytes is None:
-            os.environ.pop("SPARK_GRAFT_PERSIST_MIN_BYTES", None)
-        else:
-            os.environ["SPARK_GRAFT_PERSIST_MIN_BYTES"] = min_bytes
-        release_tracked()
-        t0 = time.monotonic()
-        _noop(engine.QUERIES["x12_cms_heavy_hitters"](spark, sf_dir))
-        return time.monotonic() - t0
+    def run(sf_dir: str, min_bytes: int) -> None:
+        registry.PERSIST_MIN_BYTES = min_bytes
+        registry.release_tracked()
+        noop(engine.QUERIES["x12_cms_heavy_hitters"](spark, sf_dir))
 
-    huge = str(10**15)  # identity everywhere
-    for side, sf_dir, a_label, a_env, b_label, b_env in [
-        # above threshold: default fires the persist; huge forces identity
-        ("above_threshold", fixture_big, "persist", None, "identity", huge),
-        # at 1x: default is identity; 0 forces the persist
-        ("at_1x", SF_DIR, "identity", None, "persist", "0"),
+    huge = 10**15  # identity everywhere
+    for side, sf_dir, a_label, a_gate, b_label, b_gate in [
+        # above threshold: the gate fires the persist; huge forces identity
+        ("above_threshold", fixture_big, "persist", gate, "identity", huge),
+        # at 1x: the gate keeps identity; 0 forces the persist
+        ("at_1x", SF_DIR, "identity", gate, "persist", 0),
     ]:
-        timed(sf_dir, a_env)
-        timed(sf_dir, b_env)  # one warm rep each
         a_w, b_w = [], []
-        for _ in range(3):
-            a_w.append(timed(sf_dir, a_env))
-            b_w.append(timed(sf_dir, b_env))
-        os.environ.pop("SPARK_GRAFT_PERSIST_MIN_BYTES", None)
+        for _ in range(3):  # interleaved, so session drift hits both arms
+            a_w.append(measure(lambda: run(sf_dir, a_gate), 1)[0])
+            b_w.append(measure(lambda: run(sf_dir, b_gate), 1)[0])
+        registry.PERSIST_MIN_BYTES = gate
         res[side] = {
-            f"{a_label}_sec": round(statistics.median(a_w), 3),
-            f"{b_label}_sec": round(statistics.median(b_w), 3),
-            f"{a_label}_walls": [round(x, 3) for x in a_w],
-            f"{b_label}_walls": [round(x, 3) for x in b_w],
+            f"{a_label}_sec": statistics.median_low(a_w),
+            f"{b_label}_sec": statistics.median_low(b_w),
+            f"{a_label}_walls": a_w,
+            f"{b_label}_walls": b_w,
         }
         print(f"  [persist] {side}: {res[side]}", file=sys.stderr)
     doc_path = os.path.join(fixture_big, "documents.parquet")
@@ -240,9 +153,9 @@ def main() -> None:
     try:
         spark = _session("scale-evidence-fixtures", cpus=32)
         print(f"building {mult}x fixture at {d} ...", file=sys.stderr)
-        _write_replicas(spark, d, mult, {"documents", "embeddings"})
+        write_replicas(spark, SF_DIR, d, mult, ("documents", "embeddings"))
         print(f"building {PERSIST_MULT}x documents at {d_big} ...", file=sys.stderr)
-        _write_replicas(spark, d_big, PERSIST_MULT, {"documents"})
+        write_replicas(spark, SF_DIR, d_big, PERSIST_MULT, ("documents",))
         spark.stop()
 
         def spawn(args: list[str], out: str) -> dict:
@@ -273,11 +186,11 @@ def main() -> None:
             "sf_dir": SF_DIR,
             "mult": mult,
             "note": (
-                "fresh subprocess session per core count (min of 2 warm "
-                "reps); ratio_8_over_32 near 4.0 = perfect core scaling, "
+                "fresh subprocess session per core count (median_low of 3 "
+                "noop-materialized reps); ratio_8_over_32 near 4.0 = perfect core scaling, "
                 "near 1.0 = overhead-bound. persist_crossover: "
                 "x12_cms_heavy_hitters interleaved persist-vs-identity "
-                "medians-of-3 in one session, on both sides of the "
+                "median_low of 3 in one session, on both sides of the "
                 "256 MiB adaptive_persist gate."
             ),
             "ops": ops,

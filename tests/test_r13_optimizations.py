@@ -17,8 +17,6 @@ inline here as the reference implementation:
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -124,7 +122,7 @@ def test_signature_multiset_min_equals_distinct_form(spark, sf_dir):
     assert new == old
 
 
-def test_adaptive_persist_size_gated(spark, sf_dir):
+def test_adaptive_persist_size_gated(spark, sf_dir, monkeypatch):
     """adaptive_persist caches a multi-consumer frame only when its
     input scan exceeds the size threshold: at the test SFs (sub-MB
     parquet) it must be the identity (the measured r13 result: the
@@ -140,15 +138,13 @@ def test_adaptive_persist_size_gated(spark, sf_dir):
     assert out.storageLevel.useMemory is False  # small input: no cache
     assert registry.release_tracked() == 0
 
-    # threshold is read from the environment per call (ADVICE r13)
-    os.environ["SPARK_GRAFT_PERSIST_MIN_BYTES"] = "0"
-    try:
-        out = registry.adaptive_persist(docs)
-        assert out.storageLevel.useMemory is True
-        assert registry.release_tracked() == 1
-        assert out.storageLevel.useMemory is False  # released
-    finally:
-        del os.environ["SPARK_GRAFT_PERSIST_MIN_BYTES"]
+    # the threshold constant is read per call
+    monkeypatch.setattr(registry, "PERSIST_MIN_BYTES", 0)
+    out = registry.adaptive_persist(docs)
+    assert out.storageLevel.useMemory is True
+    assert registry.release_tracked() == 1
+    assert out.storageLevel.useMemory is False  # released
+    monkeypatch.undo()
 
     # non-file-backed input (empty inputFiles()): takes the persist
     # path — the size heuristic has nothing to measure (ADVICE r13)

@@ -164,14 +164,12 @@ def test_x21_sparse_merge_path_equals_dense(spark, monkeypatch):
     """kmeans_fit's two partial-merge paths (dense driver pull vs
     (cluster, pos) groupBy tree merge — the 100 TB path) must produce
     the same fit to float-add-order tolerance."""
-    from real_time_event_streaming_analytics_platform_spark.functions.clustering import (
-        kmeans_fit,
-    )
+    from real_time_event_streaming_analytics_platform_spark.functions import clustering
 
     emb = load(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    C_dense, it_dense = kmeans_fit(emb, k=4, max_iters=5, tol=1e-9)
-    monkeypatch.setenv("SPARK_GRAFT_KMEANS_DENSE_MAX", "0")
-    C_sparse, it_sparse = kmeans_fit(emb, k=4, max_iters=5, tol=1e-9)
+    C_dense, it_dense = clustering.kmeans_fit(emb, k=4, max_iters=5, tol=1e-9)
+    monkeypatch.setattr(clustering, "KMEANS_DENSE_MAX", 0)
+    C_sparse, it_sparse = clustering.kmeans_fit(emb, k=4, max_iters=5, tol=1e-9)
     assert it_dense == it_sparse
     assert np.abs(np.asarray(C_dense) - np.asarray(C_sparse)).max() < 1e-9
 
