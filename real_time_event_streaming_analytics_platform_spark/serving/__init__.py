@@ -2,6 +2,7 @@
 reference read API, plus hot-store maintenance and anchored SQL views."""
 
 from .api import (  # noqa: F401
+    PLAN_CACHE_SIZE,
     WINDOW_SECONDS,
     active_alert_counts,
     alerts,
@@ -10,6 +11,7 @@ from .api import (  # noqa: F401
     hot_store_writer,
     kpi,
     parse_window,
+    plan_cache_info,
     read_hot_store,
     regroup_series,
     register_views,

@@ -37,6 +37,11 @@ so every knob here is chosen to also make sense at that scale:
   rename does the same check-then-rename
   (``AbstractFileSystem.renameInternal``), so the write-temp-then-rename
   guarantee of the offset, commit and state logs is unchanged.
+- Driver heap: half of physical memory, capped at 16g
+  (``SPARK_DRIVER_MEMORY`` overrides). In local mode the driver JVM is
+  the whole engine, and its resident size runs past the heap (off-heap
+  buffers, RocksDB, metaspace), so a heap sized to the machine gets the
+  JVM killed by the kernel's OOM killer instead of spilling.
 """
 
 from __future__ import annotations
@@ -46,6 +51,14 @@ import os
 from pyspark.sql import SparkSession
 
 _WORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker")
+_DRIVER_MEMORY_CAP_MB = 16 * 1024
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset:
+    half of physical memory, at most 16g."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(phys_mb // 2, _DRIVER_MEMORY_CAP_MB)}m"
 
 
 class SessionFactory:
@@ -86,7 +99,10 @@ class SessionFactory:
             .config("spark.executorEnv.PYTHONPATH", _WORKER_DIR)
             .config("spark.sql.parquet.filterPushdown", "true")
             .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-            .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+            .config(
+                "spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+            )
             .config(
                 "spark.sql.streaming.stateStore.providerClass",
                 "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",

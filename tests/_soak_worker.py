@@ -80,7 +80,7 @@ def main() -> None:
     spark = (
         SessionFactory.builder("soak-worker", cpus=4)
         # the worker runs beside the test session's JVM: Spark's default
-        # 1g heap, not the engine's 16g
+        # 1g heap, not the engine's default of half the machine
         .config("spark.driver.memory", "1g")
         # recentProgress is capped at 100 entries by default; a fast
         # machine runs >100 batches in the soak and the cap would

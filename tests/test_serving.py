@@ -3,20 +3,27 @@
 against the oracle; hot-store upsert has Redis SET (last-write-wins)
 semantics."""
 
+import gc
 import shutil
+import sys
 import tempfile
+import threading
+import weakref
+from datetime import timedelta
 
 import pytest
 from pyspark.sql import functions as F
 
 from real_time_event_streaming_analytics_platform_spark.catalog import load
 from real_time_event_streaming_analytics_platform_spark.serving import (
+    PLAN_CACHE_SIZE,
     active_alert_counts,
     alerts,
     hot_anchor,
     hot_store_writer,
     kpi,
     parse_window,
+    plan_cache_info,
     read_hot_store,
     regroup_series,
     register_views,
@@ -245,3 +252,129 @@ def test_series_rollup_grid_aligns_sliding_input(spark, events):
     raw = series(events, agg="count", bucket="minute").collect()
     fast = series(events, agg="count", bucket="minute", rollup=sliding).collect()
     assert sorted(map(tuple, fast)) == sorted(map(tuple, raw))
+
+
+# ---------------------------------------------------------------------------
+# Prepared reads: kpi / series / alerts hand an identical request the frame
+# the first one built.
+# ---------------------------------------------------------------------------
+
+
+def _reads(events):
+    """(endpoint, args, kwargs) of one request per prepared endpoint."""
+    hot = (
+        events.groupBy("source", F.date_trunc("minute", "ts").alias("window_start"))
+        .agg(F.count("*").alias("count_events"), F.avg("metric").alias("avg_metric"))
+        .withColumn("window", F.lit("1m"))
+    )
+    anchor = hot_anchor(hot)
+    scored = events.withColumn(
+        "severity", F.when(F.col("metric") > 400, "critical").otherwise("info")
+    )
+    return [
+        (kpi, (hot,), {"window": "1m", "limit": 20, "anchor": anchor}),
+        (series, (events,), {"start": anchor - timedelta(hours=1), "end": anchor, "rollup": hot}),
+        (series, (events,), {"start": anchor - timedelta(days=1), "end": anchor, "bucket": "hour"}),
+        (alerts, (scored,), {"severity": "critical", "limit": 50}),
+    ]
+
+
+def test_prepared_read_returns_the_same_frame(spark, events):
+    for fn, args, kwargs in _reads(events):
+        before = plan_cache_info()
+        first = fn(*args, **kwargs)
+        again = fn(*args, **kwargs)
+        assert again is first
+        after = plan_cache_info()
+        assert (after.misses - before.misses, after.hits - before.hits) == (1, 1)
+        fresh = fn.__wrapped__(*args, **kwargs)
+        assert fresh is not first
+        assert again.collect() == fresh.collect()
+
+
+def test_prepared_read_misses_on_argument_frame_or_time_zone(spark, events):
+    base = series(events, agg="count", bucket="day")
+    assert series(events, agg="count", bucket="day") is base
+    assert series(events, agg="sum", bucket="day") is not base
+    assert series(events.select("*"), agg="count", bucket="day") is not base
+    # a day bucket depends on the session time zone, which the plan bakes in
+    utc_rows = base.collect()
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        local = series(events, agg="count", bucket="day")
+        assert local is not base
+        rows = local.collect()
+        assert rows == series.__wrapped__(events, agg="count", bucket="day").collect()
+        assert rows != utc_rows
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    assert series(events, agg="count", bucket="day") is base
+
+
+def test_dropped_input_frame_frees_its_entry(spark, events):
+    scored = events.withColumn("severity", F.lit("critical"))
+    out = weakref.ref(alerts(scored, severity="critical", limit=5))
+    assert out() is not None  # the cache holds the prepared frame
+    held = plan_cache_info().currsize
+    del scored
+    gc.collect()
+    assert out() is None
+    assert plan_cache_info().currsize <= held - 1
+
+
+def test_plan_cache_is_bounded(spark, events):
+    first = alerts(events, limit=1)
+    for n in range(2, PLAN_CACHE_SIZE + 12):
+        alerts(events, limit=n)
+        assert plan_cache_info().currsize <= PLAN_CACHE_SIZE
+    assert plan_cache_info().maxsize == PLAN_CACHE_SIZE
+    # the least recently used entry went first
+    assert alerts(events, limit=1) is not first
+
+
+def test_concurrent_collects_of_a_prepared_read(spark, events):
+    anchor = events.agg(F.max("ts")).first()[0]
+    kwargs = {"start": anchor - timedelta(days=1), "end": anchor, "bucket": "hour"}
+    want = series.__wrapped__(events, **kwargs).collect()
+    frames, results, errors = set(), [], []
+
+    def reader():
+        try:
+            for _ in range(20):
+                df = series(events, **kwargs)
+                frames.add(id(df))
+                results.append(df.collect())
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        threads = [threading.Thread(target=reader) for _ in range(3)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(results) == 60 and all(r == want for r in results)
+    assert len(frames) == 1
+
+
+def test_repeat_raw_series_read_runs_one_job(spark, events):
+    sc = spark.sparkContext
+    anchor = events.agg(F.max("ts")).first()[0]
+
+    def jobs(group):
+        sc.setJobGroup(group, "prepared series read")
+        try:
+            series(events, start=anchor - timedelta(days=1), end=anchor, bucket="hour").collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    first = jobs("prepared-series-first")
+    assert first > 1  # the finished shuffle stage the repeat reuses
+    assert jobs("prepared-series-repeat") == 1
