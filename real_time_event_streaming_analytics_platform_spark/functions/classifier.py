@@ -18,8 +18,8 @@ Spark-first shape:
   partition reduces its rows to the mergeable sufficient statistics of
   the Newton step — gradient Xᵀ(p−y) and Hessian Xᵀdiag(p(1−p))X —
   via concatenate + add.reduceat / add.at / outer segment kernels;
-  the partial size is B²-bounded and CONSTANT in the corpus size, a
-  tiny groupBy merges partials, and the driver solves the
+  the partial size is B²-bounded and CONSTANT in the corpus size,
+  ``partials.sum_partials`` merges them, and the driver solves the
   ridge-damped (B+1)×(B+1) system. No RNG anywhere: w starts at zero
   and data order never affects the merged statistics beyond float
   addition order.
@@ -46,6 +46,7 @@ from .._shingle import WORDS_EXPR, _parallelize
 from ..catalog import load
 from ..operators.helpers import round2
 from ..plans.registry import query, track_persist
+from .partials import sum_partials
 from .pipeline import DSIR_BUCKETS, GRAMS_SQL_W, _bucket_spark_sql
 
 LR_BUCKETS = DSIR_BUCKETS  # share x25's feature space
@@ -168,8 +169,7 @@ def fit_quality_lr(
     Each iteration is ONE fused mapInPandas job: every partition
     reduces its rows to the mergeable sufficient statistics of the
     Newton step — the gradient Xᵀ(p−y) and the Hessian Xᵀdiag(p(1−p))X
-    — emitted SPARSE (only entries touched by the partition's bucket
-    co-occurrences), merged by a tiny groupBy, after which the driver
+    — merged by ``partials.sum_partials``, after which the driver
     solves the ridge-damped (B+1)×(B+1) system. First-order descent on
     L1-normalized sparse features needs hundreds of corpus passes
     (bucket gradients are ~1/avg_nnz-scaled and the bias gradient
@@ -196,7 +196,6 @@ def fit_quality_lr(
     w = np.zeros(dim)
     if n == 0:
         return w
-    spark = feats.sparkSession
     parts = max(4, min(512, -(-n // 20_000)))
     base = track_persist(feats.select("y", "bs", "xs").repartition(parts))
     # Fit in the COMPACT space of occupied buckets (the langid fit's
@@ -214,29 +213,16 @@ def fit_quality_lr(
     )
     dim_c = len(occ) + 1
     wc = np.zeros(dim_c)
-    hsize = dim_c * dim_c  # flat index space: [0, dim_c²) Hessian, then grad
-    # Adaptive merge (the langid fit's r11 treatment): when
-    # parts × (triangle + dim_c) doubles fits a small driver budget,
-    # each partition ships ONE dense flat array and the driver sums
-    # `parts` arrays — no per-cell (pos, v) rows, no merge shuffle.
-    # Past the budget (many partitions × wide occupied space — the
-    # 100 TB shape) the sparse (pos, v) + groupBy tree merge takes
-    # over. Same statistics either way, different float-add order
-    # (covered by the replay-parity tolerance).
+    # each partition ships its upper Hessian triangle, then its gradient
     tri_i, tri_j = np.triu_indices(dim_c)
     tri = len(tri_i)
-    dense = parts * (tri + dim_c) <= 30_000_000
     for _ in range(iters):
         wb = wc.copy()
 
-        def _partials(batches):
+        def _partial(batches):
             H = np.zeros((dim_c, dim_c))
             G = np.zeros(dim_c)
-            seen = False
             for pdf in batches:
-                if pdf.empty:
-                    continue
-                seen = True
                 lens = np.fromiter(
                     (len(v) for v in pdf["bs"]), dtype=np.int64, count=len(pdf)
                 )
@@ -276,63 +262,12 @@ def fit_quality_lr(
                     H[b, -1] += wd[i] * x
                     H[-1, b] += wd[i] * x
                     H[-1, -1] += wd[i]
-            if seen:
-                if dense:
-                    yield pd.DataFrame(
-                        {"v": [np.concatenate([H[tri_i, tri_j], G])]}
-                    )
-                else:
-                    # H is symmetric: ship the upper triangle only
-                    hi, hj = np.nonzero(np.triu(H))
-                    gi = np.nonzero(G)[0]
-                    yield pd.DataFrame(
-                        {
-                            "pos": np.concatenate(
-                                [hi.astype(np.int64) * dim_c + hj, hsize + gi]
-                            ),
-                            "v": np.concatenate([H[hi, hj], G[gi]]),
-                        }
-                    )
+            return np.concatenate([H[tri_i, tri_j], G])
 
-        # pull the merged partial as ONE Arrow batch — occupied² cells
-        # (~100k rows at a 1024-bucket space) cost seconds to collect
-        # as Row objects; the Arrow conf is runtime-settable on the
-        # driver's plain session, but SESSION-scoped, so save and
-        # restore the caller's value around the pull (ADVICE r10)
-        _ARROW = "spark.sql.execution.arrow.pyspark.enabled"
-        prior_arrow = spark.conf.get(_ARROW, None)
-        spark.conf.set(_ARROW, "true")
-        try:
-            if dense:
-                vs = base.mapInPandas(_partials, "v array<double>").toPandas()[
-                    "v"
-                ]
-            else:
-                mpdf = (
-                    base.mapInPandas(_partials, "pos long, v double")
-                    .groupBy("pos")
-                    .agg(F.sum("v").alias("v"))
-                    .toPandas()
-                )
-        finally:
-            if prior_arrow is None:
-                spark.conf.unset(_ARROW)
-            else:
-                spark.conf.set(_ARROW, prior_arrow)
+        tot = sum_partials(base, _partial, tri + dim_c)
         H = np.zeros((dim_c, dim_c))
-        G = np.zeros(dim_c)
-        if dense:
-            tot = np.zeros(tri + dim_c)
-            for a in vs:
-                tot += np.asarray(a, dtype=np.float64)
-            H[tri_i, tri_j] = tot[:tri]
-            G[:] = tot[tri:]
-        else:
-            pos = mpdf["pos"].to_numpy(dtype=np.int64)
-            val = mpdf["v"].to_numpy(dtype=np.float64)
-            hm = pos < hsize
-            H[pos[hm] // dim_c, pos[hm] % dim_c] = val[hm]
-            G[pos[~hm] - hsize] = val[~hm]
+        H[tri_i, tri_j] = tot[:tri]
+        G = tot[tri:]
         H += np.triu(H, 1).T  # mirror the shipped triangle
         delta = np.linalg.solve(H + ridge * np.eye(dim_c), G)
         wc = wc - delta

@@ -13,13 +13,12 @@ vector, so the iteration is distributed:
 - **assign**: one Arrow-batched pandas-UDF scan; the centroid matrix
   rides in the UDF closure (k×dim floats) and each batch does a single
   ``||c||² − 2·X@Cᵀ`` matmul argmin. No shuffle.
-- **update**: per-dimension ``avg(embedding[i])`` per cluster — dim
-  column aggregates in ONE HashAggregate with map-side partials, so the
-  shuffle carries k×dim doubles per map partition, never rows. The
-  driver collects the k×dim result, computes the max centroid shift,
-  and stops at ``tol`` or ``max_iters``.
+- **update**: the same pass reduces each partition to per-cluster sums
+  and counts (k×(dim+1) doubles, never rows), summed by
+  ``partials.sum_partials``. The driver divides, computes the max
+  centroid shift, and stops at ``tol`` or ``max_iters``.
 
-Per-iteration cost at 100 TB: one corpus scan + one k×dim shuffle —
+Per-iteration cost at 100 TB: one corpus scan + one k×(dim+1) merge —
 the canonical Spark k-means shape. Each iteration builds a fresh plan
 from the base frame (the only cross-iteration state is the centroid
 ndarray on the driver), so lineage depth stays constant and no
@@ -44,12 +43,11 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..plans.registry import query
 from ..operators.helpers import round2
+from .partials import sum_partials
 
 KMEANS_K = 8
 KMEANS_MAX_ITERS = 10
 KMEANS_TOL = 1e-4
-# driver-side merge budget for Lloyd partials, in doubles (see kmeans_fit)
-KMEANS_DENSE_MAX = 30_000_000
 
 
 def _assign(emb: DataFrame, centers) -> DataFrame:
@@ -82,9 +80,9 @@ def kmeans_fit(
 
     ``emb`` needs (vec_id, embedding). Each iteration is ONE job: a
     ``mapInPandas`` stage assigns every batch to its nearest centroid
-    and reduces the whole partition to (cluster, pos, sum, count)
-    partials — k×dim rows per partition regardless of row count — then
-    a tiny groupBy merges partials and the driver updates C. Assignment
+    and reduces the whole partition to per-cluster sums and counts —
+    k×(dim+1) doubles regardless of row count — which
+    ``partials.sum_partials`` merges before the driver updates C. Assignment
     and update fuse into a single corpus scan (the 64-separate-avg
     alternative pays a fresh 64-aggregate codegen per iteration and a
     second pass over the assignment column).
@@ -107,99 +105,28 @@ def kmeans_fit(
     from ..plans.registry import track_persist
 
     vectors = track_persist(emb.select("embedding"))
-    # Merge strategy is ADAPTIVE on the known partial size (the langid
-    # IRLS discipline, measured there and re-measured here: the dense
-    # driver pull ran one Lloyd iteration in 0.21 s vs 0.35 s for the
-    # per-cell groupBy merge at sf0.1 — the per-iteration exchange +
-    # barrier is pure constant cost when parts × k × (dim+1) doubles
-    # fit a small driver budget). Past the budget — the 100 TB shape —
-    # the (cluster, pos) groupBy tree merge takes over so the merge
-    # happens in the cluster, not a driver megapull. Both paths sum the
-    # same per-partition statistics and differ only in float-add order
-    # (covered by the replay test's ULP tolerance; each path is
-    # individually deterministic — collect preserves partition order).
-    parts = vectors.rdd.getNumPartitions()
-    dense = parts * k * (dim + 1) <= KMEANS_DENSE_MAX
     it = 0
     for it in range(1, max_iters + 1):
         Cb = C.copy()
         c_sq = (Cb**2).sum(axis=1)
 
-        def _partials_arrays(batches):
+        def _partial(batches):
             S = np.zeros((k, dim))
-            N = np.zeros(k, dtype=np.int64)
-            seen = False
+            N = np.zeros(k)
             for pdf in batches:
-                if pdf.empty:
-                    continue
-                seen = True
                 M = np.array(pdf["embedding"].tolist(), dtype=np.float64)
                 a = (c_sq[None, :] - 2.0 * (M @ Cb.T)).argmin(axis=1)
                 for j in np.unique(a):
                     m = a == j
                     S[j] += M[m].sum(axis=0)
                     N[j] += int(m.sum())
-            if seen:
-                yield pd.DataFrame({"s": [S.ravel().tolist()], "n": [N.tolist()]})
+            return np.concatenate([S.ravel(), N])
 
-        def _partials_rows(batches):
-            S = np.zeros((k, dim))
-            N = np.zeros(k, dtype=np.int64)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                M = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-                a = (c_sq[None, :] - 2.0 * (M @ Cb.T)).argmin(axis=1)
-                for j in np.unique(a):
-                    m = a == j
-                    S[j] += M[m].sum(axis=0)
-                    N[j] += int(m.sum())
-            live = np.flatnonzero(N)
-            if len(live):
-                yield pd.DataFrame(
-                    {
-                        "cluster": np.repeat(live, dim).astype("int32"),
-                        "pos": np.tile(np.arange(dim, dtype="int32"), len(live)),
-                        "s": S[live].ravel(),
-                        # count rides once per cluster (pos 0 rows)
-                        "n": np.where(
-                            np.tile(np.arange(dim), len(live)) == 0,
-                            np.repeat(N[live], dim),
-                            0,
-                        ),
-                    }
-                )
-
+        tot = sum_partials(vectors, _partial, k * (dim + 1))
+        S, N = tot[: k * dim].reshape(k, dim), tot[k * dim :]
         new_C = C.copy()  # empty clusters keep their previous center
-        if dense:
-            S = np.zeros(k * dim)
-            N = np.zeros(k, dtype=np.int64)
-            for r in vectors.mapInPandas(
-                _partials_arrays, "s array<double>, n array<long>"
-            ).collect():
-                S += np.asarray(r["s"])
-                N += np.asarray(r["n"])
-            S = S.reshape(k, dim)
-            for j in np.flatnonzero(N):
-                new_C[j] = S[j] / N[j]
-        else:
-            merged = (
-                vectors.mapInPandas(
-                    _partials_rows, "cluster int, pos int, s double, n long"
-                )
-                .groupBy("cluster", "pos")
-                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-                .collect()
-            )
-            counts = {}
-            sums = {}
-            for r in merged:
-                sums[(r["cluster"], r["pos"])] = r["s"]
-                if r["pos"] == 0:
-                    counts[r["cluster"]] = r["n"]
-            for j, nj in counts.items():
-                if nj:
-                    new_C[j] = [sums[(j, p)] / nj for p in range(dim)]
+        for j in np.flatnonzero(N):
+            new_C[j] = S[j] / N[j]
         shift = float(np.abs(new_C - C).max())
         C = new_C
         if shift < tol:

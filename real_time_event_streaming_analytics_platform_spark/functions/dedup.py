@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.helpers import round2
-from ..plans.registry import adaptive_persist, query
+from ..plans.registry import query
 from .._shingle import NUM_HASHES, BANDS, ROWS_PER_BAND, signature_df
 
 # ---------------------------------------------------------------------------
@@ -642,12 +642,7 @@ def x2c_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bk"),
     ).select("doc_id", "simhash", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
-    # Both self-join sides read the banded index, and the simhash build
-    # behind it (shingle hashing + 64-lane bit aggregation) is the
-    # expensive part — adaptive_persist runs it once past the input-size
-    # threshold (identical self-join sides are AQE-exchange-reused at
-    # runtime below it, where the cache constant measurably loses).
-    banded = adaptive_persist(cap_buckets(banded, ["band", "bh"], MAX_BUCKET))
+    banded = cap_buckets(banded, ["band", "bh"], MAX_BUCKET)
     a = banded.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a"), "band", "bh")
     b = banded.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sh_b"), "band", "bh")
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
@@ -917,14 +912,7 @@ def cross_source_contamination(
     differ)."""
 
     words = docs.select("source", F.split(F.trim(F.col("text")), _WS).alias("w"))
-    # sh has three consumers (totals, and both sides of the overlap
-    # self-join); adaptive_persist runs the shingle Generate + distinct
-    # once instead of three where the input is big enough for the cache
-    # to win — sh is (source, 8-byte hash) rows, far smaller than the
-    # text it derives from. Below the threshold the identical self-join
-    # sides are AQE-exchange-reused anyway and recompute wins (measured
-    # 1.55× in r13).
-    sh = adaptive_persist(
+    sh = (
         words.where(F.size("w") >= span_k)
         .select(
             "source",

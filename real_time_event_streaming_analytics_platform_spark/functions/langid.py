@@ -49,6 +49,7 @@ from ..catalog import load
 from ..operators.helpers import round2
 from ..plans.registry import query, track_persist
 from .classifier import LR_BUCKETS, LR_ITERS, LR_RIDGE, LR_TOL
+from .partials import sum_partials
 from .text import heuristic_lang_pred
 
 CHAR_N = 3  # fastText langid's default char-n-gram floor
@@ -149,7 +150,6 @@ def fit_langid(
     n = feats_labeled.count()
     if n == 0:
         return W
-    spark = feats_labeled.sparkSession
     parts = max(4, min(512, -(-n // 20_000)))
     base = track_persist(
         feats_labeled.select("lang", "bs", "xs").repartition(parts)
@@ -172,70 +172,17 @@ def fit_langid(
     dim_c = len(occ) + 1
     Wc = np.zeros((K, dim_c))
     lang_idx = {lg: k for k, lg in enumerate(langs)}
-    block = dim_c * dim_c + dim_c  # per-class flat index space: H then G
-    # K·occupied² merged cells is ~500k rows at five classes —
-    # row-object collect() spends seconds materializing them, so the
-    # merged partial is pulled as ONE Arrow batch. The conf is
-    # runtime-settable but SESSION-scoped: save the caller's value and
-    # restore it after the fit (ADVICE r10 — leaving it flipped
-    # silently changes toPandas/createDataFrame semantics for any
-    # session that had Arrow deliberately disabled).
-    _ARROW = "spark.sql.execution.arrow.pyspark.enabled"
-    prior_arrow = spark.conf.get(_ARROW, None)
-    spark.conf.set(_ARROW, "true")
-    try:
-        Wc = _irls_loop(
-            spark, base, Wc, occ, lang_idx, K, dim_c, block, iters, ridge, tol,
-            parts,
-        )
-    finally:
-        if prior_arrow is None:
-            spark.conf.unset(_ARROW)
-        else:
-            spark.conf.set(_ARROW, prior_arrow)
-    W[:, occ] = Wc[:, :-1]
-    W[:, -1] = Wc[:, -1]
-    return W
-
-
-def _irls_loop(
-    spark, base, Wc, occ, lang_idx, K, dim_c, block, iters, ridge, tol, parts
-):
-    """The fused multiclass Newton iterations (see fit_langid); split
-    out so the Arrow-conf save/restore wraps exactly the loop.
-
-    Merge strategy is ADAPTIVE on the known partial size. When
-    parts × K × (triangle + dim_c) doubles fits a small driver budget,
-    each partition ships ONE dense flat array per class and the driver
-    sums `parts` arrays — no per-cell (pos, v) rows, no merge shuffle
-    (measured: the sparse tree merge built ~1M shuffle rows per
-    iteration at dim_c=324 · K=5 · 4 partitions, ~2× the iteration
-    wall of the dense pull). Past the budget — many partitions, a wide
-    occupied space, or both, i.e. the 100 TB shape — the sparse
-    (pos, v) + groupBy tree merge takes over: partials stay
-    sparsity-sized and the merge happens in the cluster instead of a
-    driver megapull. Both paths sum the same per-partition statistics;
-    they differ only in float-add order (covered by the replay-parity
-    tolerance, and each path is individually deterministic — collect
-    preserves partition order)."""
-    import numpy as np
-
+    # each partition ships every class's upper Hessian triangle, then
+    # every class's gradient, as one flat vector
     tri_i, tri_j = np.triu_indices(dim_c)
     tri = len(tri_i)
-    seg = tri + dim_c
-    dense = parts * K * seg <= 30_000_000
-
     for _ in range(iters):
         Wb = Wc.copy()
 
-        def _accumulate(batches):
+        def _partial(batches):
             Hs = np.zeros((K, dim_c, dim_c))
             Gs = np.zeros((K, dim_c))
-            seen = False
             for pdf in batches:
-                if pdf.empty:
-                    continue
-                seen = True
                 lens = np.fromiter(
                     (len(v) for v in pdf["bs"]), dtype=np.int64, count=len(pdf)
                 )
@@ -257,74 +204,15 @@ def _irls_loop(
                 WD = np.maximum(P * (1.0 - P), 1e-6)
                 for k in range(K):
                     Hs[k] += (X * WD[:, k : k + 1]).T @ X
-            return Hs, Gs, seen
-
-        def _partials_dense(batches):
-            Hs, Gs, seen = _accumulate(batches)
-            if seen:
-                yield pd.DataFrame(
-                    {
-                        "v": [
-                            np.concatenate(
-                                [Hs[k][tri_i, tri_j] for k in range(K)]
-                                + [Gs[k] for k in range(K)]
-                            )
-                        ]
-                    }
-                )
-
-        def _partials(batches):
-            Hs, Gs, seen = _accumulate(batches)
-            if seen:
-                pos_chunks, val_chunks = [], []
-                for k in range(K):
-                    # H is symmetric: ship the upper triangle only —
-                    # halves both the merge shuffle and the driver pull
-                    hi, hj = np.nonzero(np.triu(Hs[k]))
-                    gi = np.nonzero(Gs[k])[0]
-                    pos_chunks.append(
-                        k * block + hi.astype(np.int64) * dim_c + hj
-                    )
-                    pos_chunks.append(k * block + dim_c * dim_c + gi)
-                    val_chunks.append(Hs[k][hi, hj])
-                    val_chunks.append(Gs[k][gi])
-                yield pd.DataFrame(
-                    {
-                        "pos": np.concatenate(pos_chunks),
-                        "v": np.concatenate(val_chunks),
-                    }
-                )
-
-        H = np.zeros((K, dim_c, dim_c))
-        G = np.zeros((K, dim_c))
-        if dense:
-            # one flat array per partition; driver sums `parts` arrays
-            vs = base.mapInPandas(
-                _partials_dense, "v array<double>"
-            ).toPandas()["v"]
-            tot = np.zeros(K * seg)
-            for a in vs:
-                tot += np.asarray(a, dtype=np.float64)
-            for k in range(K):
-                H[k][tri_i, tri_j] = tot[k * tri : (k + 1) * tri]
-                G[k] = tot[K * tri + k * dim_c : K * tri + (k + 1) * dim_c]
-        else:
-            # sparse (pos, v) rows + cluster-side tree merge; pull the
-            # merged partial as ONE Arrow batch (the caller set the
-            # Arrow conf for the duration of this loop) and reassemble
-            # vectorized.
-            mpdf = (
-                base.mapInPandas(_partials, "pos long, v double")
-                .groupBy("pos")
-                .agg(F.sum("v").alias("v"))
-                .toPandas()
+            return np.concatenate(
+                [Hs[k][tri_i, tri_j] for k in range(K)]
+                + [Gs[k] for k in range(K)]
             )
-            pos = mpdf["pos"].to_numpy(dtype=np.int64)
-            val = mpdf["v"].to_numpy(dtype=np.float64)
-            ks, off = np.divmod(pos, block)
-            hm = off < dim_c * dim_c
-            H[ks[hm], off[hm] // dim_c, off[hm] % dim_c] = val[hm]
-            G[ks[~hm], off[~hm] - dim_c * dim_c] = val[~hm]
+
+        tot = sum_partials(base, _partial, K * (tri + dim_c))
+        H = np.zeros((K, dim_c, dim_c))
+        H[:, tri_i, tri_j] = tot[: K * tri].reshape(K, tri)
+        G = tot[K * tri :].reshape(K, dim_c)
         upper = np.triu(H, 1)
         H += upper.transpose(0, 2, 1)  # mirror the shipped triangle
         deltas = np.stack(
@@ -336,7 +224,9 @@ def _irls_loop(
         Wc = Wc - deltas
         if float(np.abs(deltas).max()) < tol:
             break
-    return Wc
+    W[:, occ] = Wc[:, :-1]
+    W[:, -1] = Wc[:, -1]
+    return W
 
 
 def score_langid(feats: DataFrame, W, langs: list[str]) -> DataFrame:

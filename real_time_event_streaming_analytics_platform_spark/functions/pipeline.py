@@ -112,7 +112,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    local_threshold: int = SMALL_GRAPH_LOCAL,
 ) -> DataFrame:
     """(node, comp) labels: comp = min node id of the connected component.
 
@@ -126,9 +125,9 @@ def connected_components(
     groups, silently wrong for a chain longer than its iteration cap.
     No node data reaches the driver in the distributed path; the only
     thing collected per round is the (count, xor-of-edge-hashes)
-    convergence fingerprint. Edge lists at or under ``local_threshold``
-    take a bounded driver-side union-find instead (both paths tested
-    for identical labels).
+    convergence fingerprint. Edge lists at or under ``SMALL_GRAPH_LOCAL``
+    (read per call) take a bounded driver-side union-find instead (both
+    paths tested for identical labels).
     """
     # localCheckpoint (not persist) each round: persist caches the DATA
     # but leaves the logical plan nested — after k rounds Catalyst
@@ -177,7 +176,7 @@ def connected_components(
     n_edges = E.count()
     if n_edges == 0:
         labels = E.select(F.col("u").alias("node"), F.col("v").alias("comp"))
-    elif n_edges <= local_threshold:
+    elif n_edges <= SMALL_GRAPH_LOCAL:
         local = _local_components([(r["u"], r["v"]) for r in E.collect()])
         labels = edges.sparkSession.createDataFrame(
             sorted(local.items()), "node long, comp long"

@@ -119,8 +119,6 @@ def tokens(docs: DataFrame) -> DataFrame:
 def x16_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-10 documents per query. Ties break on the quantized
     score then doc_id, so both engines produce the identical ranking."""
-    from ..plans.registry import adaptive_persist
-
     docs = load(spark, sf_dir, "documents")
     # One bound token-array frame; dl is size(toks) — the per-doc length
     # needs NO corpus groupBy (the old tok.groupBy(doc_id).count()
@@ -128,11 +126,7 @@ def x16_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a grouping column (functionally dependent on doc_id), so the old
     # corpus-keyed dl join disappears too. Query terms are literals, so
     # the isin prune is map-side BELOW the (doc_id, t) aggregation:
-    # only query-term postings ever enter the tf/df shuffles. tf has
-    # two consumers (df_ + scored); adaptive_persist caches it only
-    # past the input-size threshold — below it (bench SFs) the cache
-    # constant measurably loses to recomputation, and tf's own exchange
-    # is reused at runtime by AQE anyway (registry.adaptive_persist).
+    # only query-term postings ever enter the tf/df shuffles.
     terms = sorted({t for _, t in _BM25_QUERIES})
     toks = docs.select(
         "doc_id",
@@ -152,7 +146,7 @@ def x16_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = dl.agg(
         F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
     )
-    tf = adaptive_persist(
+    tf = (
         toks.select(
             "doc_id", F.size("toks").alias("dl"), F.explode("toks").alias("t")
         )
@@ -246,18 +240,8 @@ def x17_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _surprisal_per_doc(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, nll) — the shared per-document mean unigram
-    surprisal frame behind x17 (exact NTILE) and x17b (approx cuts).
-
-    The postings frame feeds two consumers (the vocabulary count and
-    the scoring join); no ReusedExchange fires across them because the
-    aggregation side wraps the exchange in a partial HashAggregate
-    (different canonical subtree). adaptive_persist caches it only past
-    the input-size threshold — one tokenize pass instead of two where
-    the scan is big enough for that to win (registry.adaptive_persist
-    has the measured trade-off)."""
-    from ..plans.registry import adaptive_persist
-
-    tok = adaptive_persist(tokens(docs))
+    surprisal frame behind x17 (exact NTILE) and x17b (approx cuts)."""
+    tok = tokens(docs)
     cnt = tok.groupBy("t").agg(F.count("*").alias("c"))
     # total-token scalar derives from cnt (one less tokenize pass)
     tot = cnt.agg(F.sum("c").alias("n"))
@@ -337,14 +321,10 @@ def x17b_surprisal_quartile_approx(spark: SparkSession, sf_dir: str) -> DataFram
     legitimately drift a boundary doc by the rank-error margin (the
     NTILE agreement-rate test in tests/test_functions.py pins that
     envelope)."""
-    from ..plans.registry import adaptive_persist
-
-    per_doc = adaptive_persist(
-        _surprisal_per_doc(load(spark, sf_dir, "documents")).select(
-            "doc_id",
-            "n_tokens",
-            _round4(F.col("nll")).alias("avg_surprisal"),
-        )
+    per_doc = _surprisal_per_doc(load(spark, sf_dir, "documents")).select(
+        "doc_id",
+        "n_tokens",
+        _round4(F.col("nll")).alias("avg_surprisal"),
     )
     c1, c2, c3 = per_doc.stat.approxQuantile(
         "avg_surprisal", [0.25, 0.5, 0.75], 1e-3

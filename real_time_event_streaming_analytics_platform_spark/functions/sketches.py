@@ -202,15 +202,9 @@ def x12_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ε·N error bound on a planted heavy hitter, and merged==direct
     bit-equality.
     """
-    from ..plans.registry import adaptive_persist
-
     docs = load(spark, sf_dir, "documents")
     sharded = docs.withColumn("shard", F.pmod(F.xxhash64("doc_id"), F.lit(4)))
-    # toks feeds both the per-shard sketch build and the exact
-    # candidate counts; adaptive_persist runs the tokenize+explode scan
-    # once instead of twice where the input is big enough for the cache
-    # to win (identity at bench SFs — measured r13).
-    toks = adaptive_persist(_token_rows(sharded, "shard"))
+    toks = _token_rows(sharded, "shard")
     per_shard = cms_build(
         toks.withColumn("grp", F.concat_ws("|", "grp", "shard")).drop("shard")
     ).select(

@@ -850,25 +850,17 @@ def _bm25_sql_component(t: str) -> str:
 def t9_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from ..plans.registry import adaptive_persist
-
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.expr(_TOK_SPARK).alias("toks"))
-    # t is read twice (corpus-stats aggregate + the scored top-k);
-    # adaptive_persist caches it only past the input-size threshold —
-    # at bench SF re-running the tiny scan measurably beats paying the
-    # cache constant (registry.adaptive_persist has the numbers).
-    t = adaptive_persist(
-        toks.select(
-            "doc_id",
-            F.size("toks").alias("dl"),
-            *[
-                F.expr(f"size(filter(toks, w -> w = '{term}'))").alias(
-                    f"tf_{term}"
-                )
-                for term in _BM25_TERMS
-            ],
-        )
+    t = toks.select(
+        "doc_id",
+        F.size("toks").alias("dl"),
+        *[
+            F.expr(f"size(filter(toks, w -> w = '{term}'))").alias(
+                f"tf_{term}"
+            )
+            for term in _BM25_TERMS
+        ],
     )
     c = t.agg(
         F.count("*").alias("n_docs"),

@@ -61,55 +61,6 @@ def track_persist(df: DataFrame) -> DataFrame:
     return df.persist()
 
 
-# Caching a multi-consumer subtree trades one recomputation against the
-# cache's CONSTANT costs: the deserialized-batch write, the
-# TableCacheQueryStage barrier (consumers wait for full
-# materialization), and the codegen break at the InMemoryTableScan
-# boundary. Measured at sf0.1 (r13, interleaved A/B on one session)
-# that constant is ~0.3–1.1 s per query, while re-running a sub-MB
-# parquet scan+project subtree costs ~0.05 s — persist LOSES 1.1–1.6×
-# on every small-input shared subtree (x16/x24/t9/x12/x2c/x17), and
-# identical subtrees (self-join sides, repeated aggregations over one
-# exchange) are already deduplicated at runtime by AQE exchange reuse.
-# Past a few hundred MB of input the avoided re-scan dominates that
-# constant instead, so the decision is made from the subtree's actual
-# scan size, not hard-coded for either regime (guide §5's "only when
-# recomputing is more expensive than the pressure caching creates",
-# applied adaptively).
-PERSIST_MIN_BYTES = 256 * 1024 * 1024
-
-
-def adaptive_persist(df: DataFrame) -> DataFrame:
-    """track_persist(df) when the frame's input scans exceed
-    PERSIST_MIN_BYTES on disk (read per call, so a measurement can force
-    either side); identity below that. Non-local, unlistable, or
-    non-file-backed inputs — empty ``inputFiles()``, object stores,
-    streaming: the production shapes — take the persist path: at that
-    scale the avoided re-scan always exceeds the cache constant."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    try:
-        files = df.inputFiles()
-        if not files:
-            # no file-based sources (in-memory relations, streams): the
-            # size heuristic has nothing to measure — take the safe path
-            return track_persist(df)
-        total = 0
-        for f in files:
-            p = urlparse(f)
-            if p.scheme not in ("", "file"):
-                return track_persist(df)
-            # inputFiles() returns percent-encoded URIs; unquote so
-            # local paths with spaces/special chars stat correctly
-            total += os.path.getsize(unquote(p.path))
-            if total > PERSIST_MIN_BYTES:
-                return track_persist(df)
-        return df
-    except Exception:
-        return track_persist(df)
-
-
 def release_tracked() -> int:
     """Unpersist every tracked frame; returns how many were released."""
     with _TRACKED_LOCK:

@@ -10,12 +10,6 @@ sessions, each through ``bench.measure`` with results materialized by
 ``bench.noop``. A compute-bound parallel operator must show a
 sec@8 / sec@32 ratio well above 1 (4.0 is the core-ratio ceiling).
 
-It also measures the adaptive_persist crossover ON BOTH SIDES of the
-``plans.registry.PERSIST_MIN_BYTES`` gate: x12's shared token-explode
-subtree, interleaved persist-vs-identity in one session, at 1x and at a
-replica multiple whose documents scan exceeds the gate. The persist
-worker forces each arm by setting that constant in its own process.
-
 Writes SCALE_EVIDENCE_r14.json next to the repo root. Standalone by
 design — bench.py's runtime and ``__spark_entry__``'s query set stay
 untouched.
@@ -23,16 +17,14 @@ untouched.
 Usage:
   python scripts/scale_evidence.py            # full run (~20-30 min)
   python scripts/scale_evidence.py --mult 2   # faster smoke
-Internal worker modes (spawned by the parent):
-  ... worker  CPUS FIXTURE_DIR OUT_JSON
-  ... persist FIXTURE_DIR_BIG OUT_JSON
+Internal worker mode (spawned by the parent):
+  ... worker CPUS FIXTURE_DIR OUT_JSON
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import subprocess
 import sys
 
@@ -51,9 +43,6 @@ OPS = [
     "x2_build",
     "x21_kmeans_clusters",
 ]
-PERSIST_MULT = int(
-    os.environ.get("SPARK_GRAFT_PERSIST_MULT", "480")
-)  # 480 x 0.59 MB documents ≈ 285 MB > the 256 MiB gate
 
 
 def _session(name: str, cpus: int):
@@ -95,52 +84,6 @@ def worker(cpus: int, fixture: str, out_json: str) -> None:
         json.dump(res, f)
 
 
-def persist_worker(fixture_big: str, out_json: str) -> None:
-    import real_time_event_streaming_analytics_platform_spark as engine
-    from real_time_event_streaming_analytics_platform_spark.plans import registry
-
-    spark = _session("persist-crossover", cpus=32)
-    gate = registry.PERSIST_MIN_BYTES
-    res: dict = {}
-
-    def run(sf_dir: str, min_bytes: int) -> None:
-        registry.PERSIST_MIN_BYTES = min_bytes
-        registry.release_tracked()
-        noop(engine.QUERIES["x12_cms_heavy_hitters"](spark, sf_dir))
-
-    huge = 10**15  # identity everywhere
-    for side, sf_dir, a_label, a_gate, b_label, b_gate in [
-        # above threshold: the gate fires the persist; huge forces identity
-        ("above_threshold", fixture_big, "persist", gate, "identity", huge),
-        # at 1x: the gate keeps identity; 0 forces the persist
-        ("at_1x", SF_DIR, "identity", gate, "persist", 0),
-    ]:
-        a_w, b_w = [], []
-        for _ in range(3):  # interleaved, so session drift hits both arms
-            a_w.append(measure(lambda: run(sf_dir, a_gate), 1)[0])
-            b_w.append(measure(lambda: run(sf_dir, b_gate), 1)[0])
-        registry.PERSIST_MIN_BYTES = gate
-        res[side] = {
-            f"{a_label}_sec": statistics.median_low(a_w),
-            f"{b_label}_sec": statistics.median_low(b_w),
-            f"{a_label}_walls": a_w,
-            f"{b_label}_walls": b_w,
-        }
-        print(f"  [persist] {side}: {res[side]}", file=sys.stderr)
-    doc_path = os.path.join(fixture_big, "documents.parquet")
-    res["above_threshold"]["documents_scan_mb"] = round(
-        sum(
-            os.path.getsize(os.path.join(doc_path, p))
-            for p in os.listdir(doc_path)
-        )
-        / 1e6,
-        1,
-    )
-    spark.stop()
-    with open(out_json, "w") as f:
-        json.dump(res, f)
-
-
 def main() -> None:
     import shutil
     import tempfile
@@ -149,13 +92,10 @@ def main() -> None:
     if "--mult" in sys.argv:
         mult = int(sys.argv[sys.argv.index("--mult") + 1])
     d = tempfile.mkdtemp(prefix="sgr-scale-evidence-")
-    d_big = tempfile.mkdtemp(prefix="sgr-scale-persist-")
     try:
         spark = _session("scale-evidence-fixtures", cpus=32)
         print(f"building {mult}x fixture at {d} ...", file=sys.stderr)
         write_replicas(spark, SF_DIR, d, mult, ("documents", "embeddings"))
-        print(f"building {PERSIST_MULT}x documents at {d_big} ...", file=sys.stderr)
-        write_replicas(spark, SF_DIR, d_big, PERSIST_MULT, ("documents",))
         spark.stop()
 
         def spawn(args: list[str], out: str) -> dict:
@@ -171,7 +111,6 @@ def main() -> None:
 
         r32 = spawn(["worker", "32", d], f"{d}/w32.json")
         r8 = spawn(["worker", "8", d], f"{d}/w8.json")
-        pc = spawn(["persist", d_big], f"{d_big}/pc.json")
 
         ops = {}
         for name in OPS:
@@ -188,13 +127,9 @@ def main() -> None:
             "note": (
                 "fresh subprocess session per core count (median_low of 3 "
                 "noop-materialized reps); ratio_8_over_32 near 4.0 = perfect core scaling, "
-                "near 1.0 = overhead-bound. persist_crossover: "
-                "x12_cms_heavy_hitters interleaved persist-vs-identity "
-                "median_low of 3 in one session, on both sides of the "
-                "256 MiB adaptive_persist gate."
+                "near 1.0 = overhead-bound."
             ),
             "ops": ops,
-            "persist_crossover": pc,
         }
         path = os.path.join(_HERE, "SCALE_EVIDENCE_r14.json")
         with open(path, "w") as f:
@@ -203,13 +138,10 @@ def main() -> None:
         print(f"wrote {path}", file=sys.stderr)
     finally:
         shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(d_big, ignore_errors=True)
 
 
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "worker":
         worker(int(sys.argv[2]), sys.argv[3], sys.argv[4])
-    elif len(sys.argv) > 1 and sys.argv[1] == "persist":
-        persist_worker(sys.argv[2], sys.argv[3])
     else:
         main()

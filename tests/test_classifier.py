@@ -72,22 +72,39 @@ def test_x26_numpy_replay_parity(spark):
     tolerance."""
     docs = _two_vocab_docs(spark, probes=False)
     feats = hashed_features(docs, F.col("lang") == "en")
-    rows = feats.collect()
     w = fit_quality_lr(feats)
+    _assert_lr_replays(feats, w)
 
-    dim = len(w)
-    y = np.array([r["y"] for r in rows], float)
+
+def _design(rows, dim):
+    """Dense design matrix of sparse (bs, xs) feature rows, bias last."""
     X = np.zeros((len(rows), dim))
     for i, r in enumerate(rows):
         X[i, np.array(r["bs"])] = np.array(r["xs"])
     X[:, -1] = 1.0
-    wr = np.zeros(dim)
+    return X
+
+
+def _replay_irls(X, Y):
+    """Single-machine replay of the IRLS schedule: one ridge-damped
+    Newton fit per column of the 0/1 label matrix Y."""
+    W = np.zeros((Y.shape[1], X.shape[1]))
     for _ in range(LR_ITERS):
-        z = X @ wr
-        p = 1.0 / (1.0 + np.exp(-z))
-        wd = np.maximum(p * (1.0 - p), 1e-6)
-        H = (X * wd[:, None]).T @ X + LR_RIDGE * np.eye(dim)
-        wr -= np.linalg.solve(H, X.T @ (p - y))
+        deltas = []
+        for k in range(Y.shape[1]):
+            p = 1.0 / (1.0 + np.exp(-(X @ W[k])))
+            wd = np.maximum(p * (1.0 - p), 1e-6)
+            H = (X * wd[:, None]).T @ X + LR_RIDGE * np.eye(X.shape[1])
+            deltas.append(np.linalg.solve(H, X.T @ (p - Y[:, k])))
+        W -= np.stack(deltas)
+    return W
+
+
+def _assert_lr_replays(feats, w):
+    """fit_quality_lr's weights ``w`` on ``feats`` agree with the replay."""
+    rows = feats.collect()
+    X = _design(rows, len(w))
+    wr = _replay_irls(X, np.array([[r["y"]] for r in rows], float))[0]
     p_dist = 1.0 / (1.0 + np.exp(-(X @ np.asarray(w))))
     p_rep = 1.0 / (1.0 + np.exp(-(X @ wr)))
     assert np.allclose(p_dist, p_rep, atol=1e-4), np.abs(p_dist - p_rep).max()
@@ -365,9 +382,6 @@ def test_t1b_numpy_replay_parity(spark):
     """The distributed multiclass IRLS (compact occupied-bucket space,
     K-class fused partials, Arrow merge) must agree with a dense
     single-machine replay of the same schedule."""
-    from real_time_event_streaming_analytics_platform_spark.functions.classifier import (
-        LR_BUCKETS,
-    )
     from real_time_event_streaming_analytics_platform_spark.functions.langid import (
         char_gram_features,
         fit_langid,
@@ -377,26 +391,22 @@ def test_t1b_numpy_replay_parity(spark):
     feats = char_gram_features(docs).join(
         docs.select("doc_id", "lang"), "doc_id"
     )
-    rows = feats.collect()
     langs = ["aa", "bb", "cc"]
     W = fit_langid(feats, langs)
+    _assert_langid_replays(feats, langs, W)
 
-    dim = LR_BUCKETS + 1
-    X = np.zeros((len(rows), dim))
-    for i, r in enumerate(rows):
-        X[i, np.array(r["bs"])] = np.array(r["xs"])
-    X[:, -1] = 1.0
-    Wr = np.zeros((len(langs), dim))
-    for _ in range(LR_ITERS):
-        deltas = []
-        for k, lg in enumerate(langs):
-            y = np.array([float(r["lang"] == lg) for r in rows])
-            z = X @ Wr[k]
-            p = 1.0 / (1.0 + np.exp(-z))
-            wd = np.maximum(p * (1.0 - p), 1e-6)
-            H = (X * wd[:, None]).T @ X + LR_RIDGE * np.eye(dim)
-            deltas.append(np.linalg.solve(H, X.T @ (p - y)))
-        Wr -= np.stack(deltas)
+
+def _assert_langid_replays(feats, langs, W):
+    """fit_langid's weights ``W`` on ``feats`` agree with the replay."""
+    from real_time_event_streaming_analytics_platform_spark.functions.classifier import (
+        LR_BUCKETS,
+    )
+
+    rows = feats.collect()
+    X = _design(rows, LR_BUCKETS + 1)
+    Wr = _replay_irls(
+        X, np.array([[r["lang"] == lg for lg in langs] for r in rows], float)
+    )
     Zd = X @ np.asarray(W).T
     Zr = X @ Wr.T
     assert np.allclose(Zd, Zr, atol=1e-4), np.abs(Zd - Zr).max()
@@ -467,11 +477,13 @@ def test_s31_streaming_langid_matches_batch(spark, tmp_path):
 
 
 def test_fit_loops_restore_arrow_conf(spark):
-    """Both IRLS fits flip spark.sql.execution.arrow.pyspark.enabled
-    for their Arrow-batched partial pulls; they must restore the
-    caller's value afterwards — leaving it flipped silently changes
-    toPandas/createDataFrame semantics for sessions that had Arrow
-    deliberately disabled (ADVICE r10)."""
+    """The Lloyd and IRLS fits pull their partials with toArrow() and
+    must leave spark.sql.execution.arrow.pyspark.enabled as the caller
+    set it — flipping it silently changes toPandas/createDataFrame
+    semantics for sessions that had Arrow deliberately disabled."""
+    from real_time_event_streaming_analytics_platform_spark.functions.clustering import (
+        kmeans_fit,
+    )
     from real_time_event_streaming_analytics_platform_spark.functions.langid import (
         char_gram_features,
         fit_langid,
@@ -492,6 +504,13 @@ def test_fit_loops_restore_arrow_conf(spark):
         qdocs = _two_vocab_docs(spark, probes=False)
         qfeats = hashed_features(qdocs, F.col("lang") == "en")
         fit_quality_lr(qfeats, iters=1)
+        assert spark.conf.get(key) == "false"
+
+        emb = spark.createDataFrame(
+            [(i, [float(i), 1.0]) for i in range(6)],
+            "vec_id bigint, embedding array<double>",
+        )
+        kmeans_fit(emb, k=2, max_iters=1)
         assert spark.conf.get(key) == "false"
     finally:
         if prior is None:

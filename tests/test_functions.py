@@ -668,11 +668,9 @@ def test_x2e_groups_resolve_transitive_chains(spark):
     assert labels.get(100000) == 0 and labels.get(200000) == 0
 
 
-def test_connected_components_path_graph(spark):
+def test_connected_components_path_graph(spark, monkeypatch):
     """Pure CC check on a known graph: a 4-node path + an isolated edge."""
-    from real_time_event_streaming_analytics_platform_spark.functions.pipeline import (
-        connected_components,
-    )
+    from real_time_event_streaming_analytics_platform_spark.functions import pipeline
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], "src long, dst long"
@@ -684,13 +682,12 @@ def test_connected_components_path_graph(spark):
     )
     want[77] = 77
     # local union-find path (default for small edge lists) ...
-    got = {r["node"]: r["comp"] for r in connected_components(edges).collect()}
+    cc = pipeline.connected_components
+    got = {r["node"]: r["comp"] for r in cc(edges).collect()}
     assert got == want
     # ... and the distributed alternating-star path must agree exactly
-    got_star = {
-        r["node"]: r["comp"]
-        for r in connected_components(edges, local_threshold=0).collect()
-    }
+    monkeypatch.setattr(pipeline, "SMALL_GRAPH_LOCAL", 0)
+    got_star = {r["node"]: r["comp"] for r in cc(edges).collect()}
     assert got_star == want
 
 def test_connected_components_rejects_nonnumeric_ids(spark):
@@ -1081,22 +1078,18 @@ def test_x2d_candidates_stay_subquadratic(spark):
     assert cands <= 0.05 * all_pairs, (cands, all_pairs)
 
 
-def test_connected_components_long_chain(spark):
+def test_connected_components_long_chain(spark, monkeypatch):
     """A 40-hop path must collapse to one component — diameter-bound
     label propagation (the algorithm this replaced) cannot do this
     inside any practical iteration cap; alternating star converges in
     O(log^2 n) rounds regardless of diameter."""
-    from real_time_event_streaming_analytics_platform_spark.functions.pipeline import (
-        connected_components,
-    )
+    from real_time_event_streaming_analytics_platform_spark.functions import pipeline
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "src long, dst long"
     )
-    got = {
-        r["node"]: r["comp"]
-        for r in connected_components(edges, local_threshold=0).collect()
-    }
+    monkeypatch.setattr(pipeline, "SMALL_GRAPH_LOCAL", 0)
+    got = {r["node"]: r["comp"] for r in pipeline.connected_components(edges).collect()}
     assert got == {i: 0 for i in range(41)}
 
 

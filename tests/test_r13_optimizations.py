@@ -122,39 +122,6 @@ def test_signature_multiset_min_equals_distinct_form(spark, sf_dir):
     assert new == old
 
 
-def test_adaptive_persist_size_gated(spark, sf_dir, monkeypatch):
-    """adaptive_persist caches a multi-consumer frame only when its
-    input scan exceeds the size threshold: at the test SFs (sub-MB
-    parquet) it must be the identity (the measured r13 result: the
-    cache constant loses to recomputation below ~hundreds of MB), and
-    with the threshold forced to zero it must persist AND register for
-    release_tracked()."""
-    from real_time_event_streaming_analytics_platform_spark.plans import registry
-
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-
-    registry.release_tracked()
-    out = registry.adaptive_persist(docs)
-    assert out.storageLevel.useMemory is False  # small input: no cache
-    assert registry.release_tracked() == 0
-
-    # the threshold constant is read per call
-    monkeypatch.setattr(registry, "PERSIST_MIN_BYTES", 0)
-    out = registry.adaptive_persist(docs)
-    assert out.storageLevel.useMemory is True
-    assert registry.release_tracked() == 1
-    assert out.storageLevel.useMemory is False  # released
-    monkeypatch.undo()
-
-    # non-file-backed input (empty inputFiles()): takes the persist
-    # path — the size heuristic has nothing to measure (ADVICE r13)
-    mem = spark.range(10)
-    assert mem.inputFiles() == []
-    out = registry.adaptive_persist(mem)
-    assert out.storageLevel.useMemory is True
-    assert registry.release_tracked() == 1
-
-
 def test_dsir_stats_direct_agg_equals_per_doc_form(spark, sf_dir):
     from real_time_event_streaming_analytics_platform_spark.functions.pipeline import (
         _dsir_doc_buckets,

@@ -160,18 +160,77 @@ def test_x15_in_kernel_funnel_equals_dataframe_agg(spark):
     assert len(in_kernel) > 1
 
 
-def test_x21_sparse_merge_path_equals_dense(spark, monkeypatch):
-    """kmeans_fit's two partial-merge paths (dense driver pull vs
-    (cluster, pos) groupBy tree merge — the 100 TB path) must produce
-    the same fit to float-add-order tolerance."""
-    from real_time_event_streaming_analytics_platform_spark.functions import clustering
+def _merge_case(spark, fit):
+    """(caller module, fit thunk returning an ndarray, replay check or
+    None) for one sum_partials caller."""
+    from real_time_event_streaming_analytics_platform_spark.functions import (
+        classifier,
+        clustering,
+        langid,
+    )
 
-    emb = load(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    C_dense, it_dense = clustering.kmeans_fit(emb, k=4, max_iters=5, tol=1e-9)
-    monkeypatch.setattr(clustering, "KMEANS_DENSE_MAX", 0)
-    C_sparse, it_sparse = clustering.kmeans_fit(emb, k=4, max_iters=5, tol=1e-9)
-    assert it_dense == it_sparse
-    assert np.abs(np.asarray(C_dense) - np.asarray(C_sparse)).max() < 1e-9
+    from .test_classifier import (
+        _assert_langid_replays,
+        _assert_lr_replays,
+        _three_alphabet_docs,
+        _two_vocab_docs,
+    )
+
+    if fit == "kmeans_fit":
+        emb = load(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+        return (
+            clustering,
+            lambda: clustering.kmeans_fit(emb, k=4, max_iters=5, tol=1e-9)[0],
+            None,
+        )
+    if fit == "fit_langid":
+        docs = _three_alphabet_docs(spark)
+        feats = langid.char_gram_features(docs).join(
+            docs.select("doc_id", "lang"), "doc_id"
+        )
+        langs = ["aa", "bb", "cc"]
+        return (
+            langid,
+            lambda: langid.fit_langid(feats, langs),
+            lambda W: _assert_langid_replays(feats, langs, W),
+        )
+    feats = classifier.hashed_features(
+        _two_vocab_docs(spark, probes=False), F.col("lang") == "en"
+    )
+    return (
+        classifier,
+        lambda: classifier.fit_quality_lr(feats),
+        lambda w: _assert_lr_replays(feats, w),
+    )
+
+
+@pytest.mark.parametrize("fit", ["kmeans_fit", "fit_langid", "fit_quality_lr"])
+def test_tree_merge_equals_dense(spark, monkeypatch, fit):
+    """Each partials.sum_partials caller fits the same model through the
+    dense driver merge and through the groupBy tree merge (the 100 TB
+    arm, forced by a zero budget): the same number of iterations, and
+    results equal to float-add-order tolerance. The IRLS fits must
+    also agree with their single-machine numpy replay, which catches
+    an unpacking fault that both arms share."""
+    from real_time_event_streaming_analytics_platform_spark.functions import partials
+
+    mod, run, replay = _merge_case(spark, fit)
+    calls = []
+
+    def counted(df, fn, size):
+        calls.append(size)
+        return partials.sum_partials(df, fn, size)
+
+    monkeypatch.setattr(mod, "sum_partials", counted)
+    dense = np.asarray(run())
+    it_dense = len(calls)
+    calls.clear()
+    monkeypatch.setattr(partials, "DRIVER_MERGE_MAX", 0)
+    tree = np.asarray(run())
+    assert len(calls) == it_dense > 0
+    assert np.abs(dense - tree).max() < 1e-9
+    if replay is not None:
+        replay(dense)
 
 
 def test_x3d_mapside_topk_matches_driver_reference(spark):
