@@ -26,7 +26,6 @@ runtime filter where it fires, shard store).
 
     python bench.py              # the bench
     python bench.py --promote    # BENCH_DETAIL.json -> BENCH_PREV.json
-    python bench.py --ab <ref>   # same-machine A/B against a git ref
 """
 
 from __future__ import annotations
@@ -64,8 +63,8 @@ REPLICA_FILES = 64
 MATERIALIZE = "noop"
 
 # Queries whose FIRST execution in a session pays a one-time
-# materialized-index build (the session-scoped memos in
-# functions/dedup.py and operators/reference.py): x2/x2b/x2e share the
+# materialized-index build (tables built once through
+# catalog.derived): x2/x2b/x2e share the
 # MinHash signature+candidate index, x2f adds the bucketed band index,
 # r7/r9/r10 share the anomalies table. Their steady state is what the
 # *_probe_sec keys of _bench_index_split measure, so they are excluded
@@ -775,10 +774,12 @@ def _bench_index_split(spark, sf_dir: str) -> dict[str, float]:
     signature+candidate index (x2 family), the bucketed band index
     (x2f), the anomalies table (r7/r9/r10), the IVF / IVFADC ANN indexes
     (x3c / x3e) and the x27 nprobe curve's standing index."""
-    from real_time_event_streaming_analytics_platform_spark.catalog import load
+    from real_time_event_streaming_analytics_platform_spark.catalog import (
+        clear_derived,
+        load,
+    )
     from real_time_event_streaming_analytics_platform_spark.functions.dedup import (
         candidate_index,
-        clear_index_caches,
         standing_band_index,
     )
     from real_time_event_streaming_analytics_platform_spark.functions.similarity import (
@@ -798,9 +799,9 @@ def _bench_index_split(spark, sf_dir: str) -> dict[str, float]:
 
     out: dict[str, float] = {}
     try:
-        # the main loop built these memos (written tables, untouched by
-        # clearCache); drop them so each build is measured as a build
-        clear_index_caches()
+        # the main loop built these tables (untouched by clearCache);
+        # forget them so each build is measured as a build
+        clear_derived()
         for key, build, query in (
             ("x2", candidate_index, "x2_minhash_near_dup"),
             ("x2f", standing_band_index, "x2f_incremental_dedup"),
@@ -1277,89 +1278,8 @@ def _promote() -> None:
     print(f"promoted {src} -> {dst}")
 
 
-def _ab(ref: str) -> None:
-    """Same-machine A/B against an arbitrary git ref: check the ref out
-    into a temp worktree, run ITS bench.py as a subprocess, then run
-    HEAD's bench.py, both with SPARK_GRAFT_SCALEUP=0 (the A/B compares
-    queries, not fixtures), and print one JSON line with both totals,
-    both floors, each side's materialization method and the raw
-    per-query ratios (HEAD/ref; < 1 means HEAD is faster). Ratios across
-    methods compare a count() plan with a noop one; the method fields
-    say so. Writes AB_RESULT.json next to this file."""
-    import subprocess
-
-    wt = tempfile.mkdtemp(prefix=f"sgr-ab-{ref.replace('/', '_')}-")
-
-    def run_bench(cwd: str) -> dict:
-        env = dict(os.environ)
-        env["SPARK_GRAFT_SCALEUP"] = "0"
-        proc = subprocess.run(
-            [sys.executable, os.path.join(cwd, "bench.py")],
-            cwd=cwd,
-            env=env,
-            capture_output=True,
-            text=True,
-            timeout=3600,
-        )
-        if proc.returncode != 0:
-            raise RuntimeError(
-                f"bench in {cwd} failed rc={proc.returncode}: "
-                f"{proc.stderr[-2000:]}"
-            )
-        with open(os.path.join(cwd, "BENCH_DETAIL.json")) as f:
-            return json.load(f)
-
-    # the HEAD bench subprocess rewrites BENCH_DETAIL.json; an A/B run
-    # must not clobber the round's official detail artifact
-    detail_path = os.path.join(_HERE, "BENCH_DETAIL.json")
-    saved_detail = None
-    if os.path.exists(detail_path):
-        with open(detail_path) as f:
-            saved_detail = f.read()
-    try:
-        subprocess.run(
-            ["git", "worktree", "add", "--detach", wt, ref],
-            cwd=_HERE,
-            check=True,
-            capture_output=True,
-        )
-        prev = run_bench(wt)
-        now = run_bench(_HERE)
-    finally:
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", wt],
-            cwd=_HERE,
-            capture_output=True,
-        )
-        if saved_detail is not None:
-            with open(detail_path, "w") as f:
-                f.write(saved_detail)
-    raw = {
-        k: round(v / prev["queries"][k], 2)
-        for k, v in now.get("queries", {}).items()
-        if prev.get("queries", {}).get(k)
-    }
-    result = {
-        "ref": ref,
-        "ref_materialize": prev.get("materialize", "count"),
-        "head_materialize": now.get("materialize", "count"),
-        "ref_total_sec": prev.get("value"),
-        "head_total_sec": now.get("value"),
-        "ref_floor_sec": prev.get("spark_job_floor_sec"),
-        "head_floor_sec": now.get("spark_job_floor_sec"),
-        "n_common": len(raw),
-        "median_ratio_raw": round(statistics.median(raw.values()), 2) if raw else None,
-        "ratios_raw": raw,
-    }
-    with open(os.path.join(_HERE, "AB_RESULT.json"), "w") as f:
-        json.dump(result, f, indent=1, sort_keys=True)
-    print(json.dumps(result))
-
-
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "--promote":
         _promote()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--ab":
-        _ab(sys.argv[2])
     else:
         main()

@@ -43,11 +43,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .._shingle import WORDS_EXPR, _parallelize
-from ..catalog import load
+from ..catalog import derived, load
 from ..operators.helpers import round2
 from ..plans.registry import query, track_persist
 from .partials import sum_partials
-from .pipeline import DSIR_BUCKETS, GRAMS_SQL_W, _bucket_spark_sql
+from .pipeline import DSIR_BUCKETS, GRAMS_SQL_W, _bucket_spark_sql, heldout_split
 
 LR_BUCKETS = DSIR_BUCKETS  # share x25's feature space
 LR_ITERS = 4
@@ -351,50 +351,35 @@ def x26_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session-scoped memo for x26's train-fold weights, shared by the
-# held-out eval and the threshold-curve queries (the langid
-# _TRAIN_FOLD_MODEL_MEMO pattern; VERDICT r12 #7 — the pair would
-# otherwise each pay the IRLS fit). KEY CONTRACT (ADVICE r12, same as
-# langid): on a hit the train frame is ignored and the memo is never
-# invalidated, so the key must uniquely determine the fold CONTENT and
-# the target — the registered queries key on sf_dir + fold boundary +
-# target tag; ad-hoc frames (planted fixtures, custom targets) pass
-# None and always fit fresh. The fit is deterministic, so memo-vs-fresh
-# is value-identical (pinned in tests/test_classifier.py).
-_QUALITY_FOLD_MEMO: dict[str, object] = {}
-
-# x5's md5 train-fold boundary, shared by every held-out x26 surface
-_FOLD_PREFIX_SQL = "substring(md5(cast(doc_id as string)), 1, 2)"
-_FOLD_BOUNDARY = "cc"
+def _fit_train_fold(docs: DataFrame, target):
+    """Quality LR weights fitted on x5's train fold of ``docs`` only."""
+    train, _ = heldout_split(docs)
+    return fit_quality_lr(track_persist(hashed_features(train, target)))
 
 
-def _quality_train_fold_model(train: DataFrame, target, memo_key: str | None):
-    if memo_key is not None and memo_key in _QUALITY_FOLD_MEMO:
-        return _QUALITY_FOLD_MEMO[memo_key]
-    w = fit_quality_lr(track_persist(hashed_features(train, target)))
-    if memo_key is not None:
-        _QUALITY_FOLD_MEMO[memo_key] = w
-    return w
-
-
-def _heldout_split(docs: DataFrame):
-    prefix = F.expr(_FOLD_PREFIX_SQL)
-    return (
-        docs.where(prefix < F.lit(_FOLD_BOUNDARY)),
-        docs.where(prefix >= F.lit(_FOLD_BOUNDARY)),
+def _train_fold_model(spark: SparkSession, sf_dir: str, docs: DataFrame):
+    """The registered corpus's train-fold weights for x26's target
+    (lang = 'en'), fitted once per corpus and shared by x26_heldout_eval
+    and x26b_threshold_curve. The fit is deterministic, so sharing it
+    changes the wall, never a value (pinned in tests/test_classifier.py)."""
+    return derived(
+        spark,
+        sf_dir,
+        "documents",
+        "x26_train_fold|lang=en",
+        lambda: _fit_train_fold(docs, F.col("lang") == "en"),
     )
 
 
-def quality_heldout_eval(
-    docs: DataFrame, target=None, memo_key: str | None = None
-) -> DataFrame:
+def quality_heldout_eval(docs: DataFrame, target=None, model=None) -> DataFrame:
     """Held-out generalization measurement for the x26 quality LR
     (VERDICT r10 #5): train ONLY on x5's deterministic md5 'train'
     fold against the weak labels (default: lang = 'en', x26's target),
     score the held-out (val + test) fold with the frozen weights, and
     report per-weak-label counts — (label, n_docs, n_pred_keep,
     n_correct, accuracy). Overall held-out accuracy is
-    sum(n_correct)/sum(n_docs).
+    sum(n_correct)/sum(n_docs). ``model`` is the train-fold weight
+    vector for ``target``; None fits it here.
 
     The bar is argued in tests/test_classifier.py: on the synthetic
     testdata the weak label is independent of the text, so the
@@ -402,8 +387,8 @@ def quality_heldout_eval(
     separable corpus the same pipeline is perfect held-out."""
     if target is None:
         target = F.col("lang") == "en"
-    train, held = _heldout_split(docs)
-    w = _quality_train_fold_model(train, target, memo_key)
+    w = _fit_train_fold(docs, target) if model is None else model
+    _, held = heldout_split(docs)
     scored = held.select(
         "doc_id", target.cast("long").alias("label")
     ).join(
@@ -426,13 +411,9 @@ def quality_heldout_eval(
 
 @query("x26_heldout_eval")
 def x26_heldout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rows-only (trained model): held-out per-class eval of x26.
-    Shares the train-fold fit with x26b_threshold_curve via the
-    session memo (identical model by determinism)."""
-    return quality_heldout_eval(
-        load(spark, sf_dir, "documents"),
-        memo_key=f"{sf_dir}|<{_FOLD_BOUNDARY}|en",
-    )
+    """Rows-only (trained model): held-out per-class eval of x26."""
+    docs = load(spark, sf_dir, "documents")
+    return quality_heldout_eval(docs, model=_train_fold_model(spark, sf_dir, docs))
 
 
 # Threshold grid for the operating-point curve: 0.05 steps, open ends
@@ -441,9 +422,7 @@ def x26_heldout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 THRESHOLD_GRID_STEP = 0.05
 
 
-def quality_threshold_curve(
-    docs: DataFrame, target=None, memo_key: str | None = None
-) -> DataFrame:
+def quality_threshold_curve(docs: DataFrame, target=None, model=None) -> DataFrame:
     """Held-out precision/recall curve for the x26 quality filter
     (VERDICT r12 #6) — the missing step between TRAINING a filter and
     RUNNING it at 100 TB: model_keep_list was wired with a hard-coded
@@ -452,7 +431,8 @@ def quality_threshold_curve(
     point instead of guessing.
 
     Output: (threshold, n_keep, tp, precision, recall, f1) — one row
-    per grid threshold, keep-rule ``prob >= t``.
+    per grid threshold, keep-rule ``prob >= t``. ``model`` as in
+    quality_heldout_eval.
 
     100 TB shape: the corpus-sized work is ONE aggregation — each
     held-out doc's score is bucketed (floor(prob/step)) and reduced to
@@ -465,8 +445,8 @@ def quality_threshold_curve(
     if target is None:
         target = F.col("lang") == "en"
     spark = docs.sparkSession
-    train, held = _heldout_split(docs)
-    w = _quality_train_fold_model(train, target, memo_key)
+    w = _fit_train_fold(docs, target) if model is None else model
+    _, held = heldout_split(docs)
     scored = held.select(
         "doc_id", target.cast("long").alias("label")
     ).join(
@@ -579,13 +559,12 @@ def quality_keep_auto(
 @query("x26b_threshold_curve")
 def x26b_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows-only (trained model): held-out precision/recall/f1 at each
-    grid threshold for the x26 quality filter. Shares the train-fold
-    fit with x26_heldout_eval via the session memo; tuple-level numpy
+    grid threshold for the x26 quality filter. Tuple-level numpy
     differential + graded-signal non-degeneracy pinned in
     tests/test_classifier.py."""
+    docs = load(spark, sf_dir, "documents")
     return quality_threshold_curve(
-        load(spark, sf_dir, "documents"),
-        memo_key=f"{sf_dir}|<{_FOLD_BOUNDARY}|en",
+        docs, model=_train_fold_model(spark, sf_dir, docs)
     )
 
 

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .._shingle import WORDS_EXPR
 from ..catalog import load
 from ..plans.registry import query
 from .dedup import candidate_index
@@ -237,16 +238,28 @@ def x2e_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and adding documents never moves an existing one between splits.
 # ---------------------------------------------------------------------------
 
+# md5(doc_id)'s first two hex chars: the per-doc hash the x5 split,
+# x9 mixing and x29 temperature keep decisions compare
+_DOC_PREFIX = "substring(md5(cast(doc_id as string)), 1, 2)"
+_TRAIN_BELOW = "cc"  # train fold: prefix < 'cc'; held-out (val + test): the rest
+
+
+def heldout_split(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(train, held) — x5's train fold and its val + test remainder,
+    the split every held-out model evaluation trains and scores on."""
+    prefix = F.expr(_DOC_PREFIX)
+    return docs.where(prefix < _TRAIN_BELOW), docs.where(prefix >= _TRAIN_BELOW)
+
 
 @query(
     "x5_train_split",
-    oracle="""
+    oracle=f"""
     SELECT split, COUNT(*) AS n_docs,
            CAST(MIN(doc_id) AS BIGINT) AS min_doc,
            CAST(MAX(doc_id) AS BIGINT) AS max_doc
     FROM (
         SELECT doc_id,
-               CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cc' THEN 'train'
+               CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '{_TRAIN_BELOW}' THEN 'train'
                     WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e6' THEN 'val'
                     ELSE 'test' END AS split
         FROM documents
@@ -255,9 +268,11 @@ def x2e_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x5_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    prefix = F.expr("substring(md5(cast(doc_id as string)), 1, 2)")
+    prefix = F.expr(_DOC_PREFIX)
     split = (
-        F.when(prefix < "cc", "train").when(prefix < "e6", "val").otherwise("test")
+        F.when(prefix < _TRAIN_BELOW, "train")
+        .when(prefix < "e6", "val")
+        .otherwise("test")
     )
     return (
         docs.select("doc_id", split.alias("split"))
@@ -442,6 +457,8 @@ _MIX_THRESH_DUCK = (
     "CASE WHEN TRY_CAST(substr(source, 4, 10) AS INT) % 2 = 0 "
     "THEN '80' ELSE 'ff' END"
 )
+# the keep decision itself, shared by x9, the x10 funnel and its stream twin
+_MIX_KEEP_SQL = f"{_DOC_PREFIX} <= ({_MIX_THRESH_SPARK})"
 
 
 @query(
@@ -458,13 +475,10 @@ _MIX_THRESH_DUCK = (
 )
 def x9_source_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    kept = F.expr(
-        f"substring(md5(cast(doc_id as string)), 1, 2) <= ({_MIX_THRESH_SPARK})"
-    )
     return (
         docs.select(
             "source",
-            kept.alias("_keep"),
+            F.expr(_MIX_KEEP_SQL).alias("_keep"),
             F.expr(_WS_TOK_SPARK).alias("tokens"),
         )
         .groupBy("source")
@@ -561,6 +575,16 @@ def x7_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _QUAL_MIN_TOKENS = 20  # regex tokens; drops ~10% of the synthetic corpus
+
+
+def quality_gate(min_tokens: int = _QUAL_MIN_TOKENS) -> "F.Column":
+    """x10's quality predicate over the bound ``_toks`` word array
+    (``WORDS_EXPR``): at least ``min_tokens`` words, and at most half of
+    them repeats — shared by the batch funnel and its stream twin."""
+    n = F.expr("size(_toks)")
+    return (n >= min_tokens) & (
+        (n - F.expr("size(array_distinct(_toks))")) * 2 <= n
+    )
 
 
 @query(
@@ -669,25 +693,16 @@ def curation_funnel(
     # quality survivors) without changing any keeper decision, keeping
     # this a single pass. The window shuffles (hash, doc_id, flags),
     # never the text.
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), w -> w != '')"
     flagged = (
-        corpus.withColumn("_toks", F.expr(toks))
+        corpus.withColumn("_toks", F.expr(WORDS_EXPR))
         .select(
             "source",
             "doc_id",
             *(["lang"] if temp_rates is not None else []),
             F.expr(_WS_TOK_SPARK).alias("ws_tokens"),
-            (
-                (F.expr("size(_toks)") >= _QUAL_MIN_TOKENS)
-                & (
-                    (F.expr("size(_toks)") - F.expr("size(array_distinct(_toks))")) * 2
-                    <= F.expr("size(_toks)")
-                )
-            ).alias("qual"),
+            quality_gate().alias("qual"),
             F.md5(F.lower("text")).alias("_h"),
-            F.expr(
-                f"substring(md5(cast(doc_id as string)), 1, 2) <= ({_MIX_THRESH_SPARK})"
-            ).alias("mix"),
+            F.expr(_MIX_KEEP_SQL).alias("mix"),
             *([(~F.col("gopher_flagged")).alias("gop")] if gopher else []),
         )
         .withColumn(
@@ -1288,8 +1303,7 @@ def temp_keep_expr(rate_col) -> "F.Column":
     stream follows)."""
     r = F.coalesce(rate_col, F.lit(256))
     return (r >= 256) | (
-        F.expr("substring(md5(cast(doc_id as string)), 1, 2)")
-        < F.format_string("%02x", r)
+        F.expr(_DOC_PREFIX) < F.format_string("%02x", r)
     )
 
 

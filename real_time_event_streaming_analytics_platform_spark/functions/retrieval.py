@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..plans.registry import query
+from ..plans.registry import query, track_persist
 
 # Tokenizer shared by both ops; the explicit character class keeps Java
 # regex (Spark) and RE2 (DuckDB oracle) semantics identical.
@@ -321,10 +321,12 @@ def x17b_surprisal_quartile_approx(spark: SparkSession, sf_dir: str) -> DataFram
     legitimately drift a boundary doc by the rank-error margin (the
     NTILE agreement-rate test in tests/test_functions.py pins that
     envelope)."""
-    per_doc = _surprisal_per_doc(load(spark, sf_dir, "documents")).select(
-        "doc_id",
-        "n_tokens",
-        _round4(F.col("nll")).alias("avg_surprisal"),
+    per_doc = track_persist(
+        _surprisal_per_doc(load(spark, sf_dir, "documents")).select(
+            "doc_id",
+            "n_tokens",
+            _round4(F.col("nll")).alias("avg_surprisal"),
+        )
     )
     c1, c2, c3 = per_doc.stat.approxQuantile(
         "avg_surprisal", [0.25, 0.5, 0.75], 1e-3
@@ -412,8 +414,6 @@ def x19_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, the battery's broadcast-scalar pattern). Docs with < 2 tokens
     have no bigrams and are excluded by both engines.
     """
-    from ..plans.registry import track_persist
-
     docs = load(spark, sf_dir, "documents")
     # bound is projected to (doc_id, _ws) and persisted: its two
     # consumers (pair explode, vocabulary explode) otherwise each
@@ -505,8 +505,6 @@ def bigram_surprisal_capped(docs: DataFrame, vocab_size: int = X19B_VOCAB) -> Da
     pair explode AND the vocabulary count; mapped feeds the
     bigram-count chain AND the scoring join. Persisting them runs
     tokenize / vocab-mapping once each instead of twice."""
-    from ..plans.registry import track_persist
-
     bound = track_persist(
         docs.select("doc_id", F.expr(_WORDS_SQL).alias("_ws"))
     )

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .._shingle import WORDS_EXPR
 from ..catalog import load
 from ..plans.registry import query
 from ..operators.helpers import (
@@ -27,8 +28,7 @@ from ..operators.helpers import (
     sql_round2,
 )
 
-# tokens = non-empty runs of [a-z0-9] in the lowercased text
-_TOK_SPARK = "filter(split(lower(text), '[^a-z0-9]+'), w -> w != '')"
+# tokens = non-empty runs of [a-z0-9] in the lowercased text (WORDS_EXPR)
 _TOK_DUCK = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w != '')"
 
 _STOPWORDS = {
@@ -81,7 +81,7 @@ def q25_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q25b_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     return (
-        docs.select(F.explode(F.expr(_TOK_SPARK)).alias("token"))
+        docs.select(F.explode(F.expr(WORDS_EXPR)).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("n"))
         .orderBy(F.col("n").desc(), "token")
@@ -97,7 +97,7 @@ def q25b_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lang_counts_spark():
     return [
-        F.expr(f"size(filter({_TOK_SPARK}, w -> w IN ({_in_list(ws)})))").alias(
+        F.expr(f"size(filter({WORDS_EXPR}, w -> w IN ({_in_list(ws)})))").alias(
             f"c_{lang}"
         )
         for lang, ws in _STOPWORDS.items()
@@ -191,11 +191,11 @@ def t2_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select(
         "doc_id",
         "n_chars",
-        F.expr(f"size({_TOK_SPARK})").alias("n_tokens"),
+        F.expr(f"size({WORDS_EXPR})").alias("n_tokens"),
         F.length(F.regexp_replace(F.lower("text"), "[^a-z0-9]", "")).alias(
             "alpha_chars"
         ),
-        F.expr(f"size(filter({_TOK_SPARK}, w -> w IN ({_ALL_STOP})))").alias(
+        F.expr(f"size(filter({WORDS_EXPR}, w -> w IN ({_ALL_STOP})))").alias(
             "stop_hits"
         ),
     )
@@ -276,7 +276,7 @@ def t4_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
     )
     return (
-        docs.withColumn("_toks", F.expr(_TOK_SPARK))
+        docs.withColumn("_toks", F.expr(WORDS_EXPR))
         .withColumn("_grams", grams)
         .select(
             "doc_id",
@@ -321,7 +321,7 @@ _FP_W = 4  # winnowing window, in shingles
 
 # token hashes: h(w) = fold over chars of (a*B1 + ascii(c)) mod M
 _FP_TH_SPARK = (
-    f"transform({_TOK_SPARK}, w -> aggregate(split(w, ''), 0L,"
+    f"transform({WORDS_EXPR}, w -> aggregate(split(w, ''), 0L,"
     f" (a, c) -> (a * {_FP_B1} + ascii(c)) % {_FP_M}))"
 )
 # shingle hashes: fold the K token hashes with base B2 mod M
@@ -434,7 +434,7 @@ def t6_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # document costs ~20 M comparisons, not ~10^12. Still strictly
     # per-row (no shuffle), still whole-stage-codegen'd.
     base = (
-        docs.withColumn("_toks", F.expr(_TOK_SPARK))
+        docs.withColumn("_toks", F.expr(WORDS_EXPR))
         .select(
             "doc_id",
             F.expr("size(_toks)").alias("n_tokens"),
@@ -632,7 +632,7 @@ HOT_DOCS = 3
 )
 def t7_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    words = docs.withColumn("_words", F.expr(_TOK_SPARK)).select(
+    words = docs.withColumn("_words", F.expr(WORDS_EXPR)).select(
         "doc_id",
         "_words",
         F.expr(f"size(_words) div {CHUNK_WORDS}").alias("n_chunks"),
@@ -851,7 +851,7 @@ def t9_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.expr(_TOK_SPARK).alias("toks"))
+    toks = docs.select("doc_id", F.expr(WORDS_EXPR).alias("toks"))
     t = toks.select(
         "doc_id",
         F.size("toks").alias("dl"),
@@ -1102,7 +1102,7 @@ def _gopher_raw(docs: DataFrame, carry: list) -> DataFrame:
     """(carry..., n_words, n_lines, rule fractions): the shared rule
     computation behind gopher_rules / with_gopher_flag."""
     bound = (
-        docs.withColumn("_toks", F.expr(_TOK_SPARK))
+        docs.withColumn("_toks", F.expr(WORDS_EXPR))
         .withColumn("_ws", F.expr("filter(split(text, '\\\\s+'), w -> w != '')"))
         .withColumn("_rl", F.expr("split(text, '\\n')"))
         .withColumn("_ln", F.expr(_win_expr(LINE_WORDS)))

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import derived, load, scratch_dir
 from ..plans.registry import query
 from .helpers import davg, fmt_ts, quant6, round2, sql_davg, sql_round2
 
@@ -241,33 +241,21 @@ def _rolling_scored(events: DataFrame) -> DataFrame:
     )
 
 
-# Session-scoped materialized anomalies table, keyed by (application,
-# sf_dir, events fingerprint) — the same discipline as the dedup
-# signature/candidate indexes (functions/dedup.py). This mirrors the
-# reference architecture LITERALLY: the anomaly job writes alerts to a
-# TABLE (anomalies_db topic → TimescaleDB) and /alerts + the stats
-# endpoints read the table — they never re-run detection per request.
-# r7 (full scan), r9 (filtered scan) and r10 (conditional agg) therefore
-# share one materialization instead of each re-sorting the event stream
-# through the rolling window.
-_ANOM_INDEX: dict[tuple[str, str, str], str] = {}
-
-
 def anomalies_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.dedup import _corpus_fingerprint, _scratch_dir
+    """The anomalies table, written once per session. This mirrors the
+    reference architecture: the anomaly job writes alerts to a TABLE
+    (anomalies_db topic → TimescaleDB) and /alerts + the stats endpoints
+    read it — they never re-run detection per request. r7 (full scan),
+    r9 (filtered scan) and r10 (conditional agg) share it instead of
+    each re-sorting the event stream through the rolling window."""
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _corpus_fingerprint(sf_dir, table="events"),
-    )
-    path = _ANOM_INDEX.get(key)
-    if path is None:
-        path = _scratch_dir("sgr-anomalies-") + "/anomalies_t"
+    def build() -> str:
+        path = scratch_dir("sgr-anomalies-") + "/anomalies_t"
         events = load(spark, sf_dir, "events")
         _anomalies_t(events).write.mode("overwrite").parquet(path)
-        _ANOM_INDEX[key] = path
-    return spark.read.parquet(path)
+        return path
+
+    return spark.read.parquet(derived(spark, sf_dir, "events", "anomalies", build))
 
 
 def _anomalies_t(events: DataFrame) -> DataFrame:

@@ -35,11 +35,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .._shingle import WORDS_EXPR
 from ..functions.pipeline import (
     DECON_WIDTH,
     _BENCH_PRED,
-    _MIX_THRESH_SPARK,
+    _MIX_KEEP_SQL,
     _QUAL_MIN_TOKENS,
+    quality_gate,
 )
 from .entries import WATERMARK
 
@@ -51,8 +53,6 @@ def bench_gram_set(docs: DataFrame, width: int = DECON_WIDTH) -> set:
     strings, collected to the driver for broadcasting. Tokenization is
     identical to the batch path's (`_shingle.WORDS_EXPR`): lowercase,
     split on non-alphanumeric runs, drop empties."""
-    from .._shingle import WORDS_EXPR
-
     pos = F.expr(
         f"""
         CASE WHEN size(_words) < {width} THEN array()
@@ -134,23 +134,15 @@ def curate_doc_stream(
             )
         return pd.Series(out)
 
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), w -> w != '')"
-    qual = (F.expr("size(_toks)") >= min_tokens) & (
-        (F.expr("size(_toks)") - F.expr("size(array_distinct(_toks))")) * 2
-        <= F.expr("size(_toks)")
-    )
-    mix = F.expr(
-        f"substring(md5(cast(doc_id as string)), 1, 2) <= ({_MIX_THRESH_SPARK})"
-    )
     out = docs.where(~F.expr(_BENCH_PRED))
     if gopher:
         from ..functions.text import with_gopher_flag
 
         out = with_gopher_flag(out)
-    out = out.withColumn("_toks", F.expr(toks)).where(qual)
+    out = out.withColumn("_toks", F.expr(WORDS_EXPR)).where(quality_gate(min_tokens))
     if gopher:
         out = out.where(~F.col("gopher_flagged")).drop("gopher_flagged")
-    out = out.where(mix)
+    out = out.where(F.expr(_MIX_KEEP_SQL))
     if temp_rates is not None:
         from ..functions.pipeline import temp_keep_expr
 

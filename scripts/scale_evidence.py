@@ -57,9 +57,9 @@ def _session(name: str, cpus: int):
 
 def worker(cpus: int, fixture: str, out_json: str) -> None:
     import real_time_event_streaming_analytics_platform_spark as engine
+    from real_time_event_streaming_analytics_platform_spark.catalog import clear_derived
     from real_time_event_streaming_analytics_platform_spark.functions.dedup import (
         candidate_index,
-        clear_index_caches,
     )
     from real_time_event_streaming_analytics_platform_spark.plans.registry import (
         release_tracked,
@@ -72,7 +72,7 @@ def worker(cpus: int, fixture: str, out_json: str) -> None:
         def run() -> None:
             release_tracked()
             if name == "x2_build":
-                clear_index_caches()
+                clear_derived()
                 candidate_index(spark, fixture)
             else:
                 noop(engine.QUERIES[name](spark, fixture))

@@ -17,6 +17,7 @@ from real_time_event_streaming_analytics_platform_spark.functions.classifier imp
 )
 from real_time_event_streaming_analytics_platform_spark.functions.pipeline import (
     curation_funnel,
+    heldout_split,
 )
 
 
@@ -135,27 +136,24 @@ def test_funnel_model_stage_composes(spark):
 def test_x26b_threshold_curve_matches_numpy_differential(spark):
     """x26b (VERDICT r12 #6): the registered held-out threshold curve
     must equal a numpy recomputation from the held-fold scores under
-    the SAME (memoized) train-fold weights — exact tp/n_keep per grid
-    threshold, metric columns to round2 tolerance. Also pins the memo
-    honesty (query path memoizes; memo values equal a fresh fit) and
-    the x26_heldout_eval/x26b fit sharing."""
+    the SAME (shared) train-fold weights — exact tp/n_keep per grid
+    threshold, metric columns to round2 tolerance. Also pins that the
+    shared fit is value-identical to a fresh one (the eval query, which
+    reuses it, equals a fresh library call)."""
     import math
 
     from real_time_event_streaming_analytics_platform_spark.functions import classifier as C
 
     sf = "/root/testdata/sf0.001"
     curve = engine.QUERIES["x26b_threshold_curve"](spark, sf).collect()
-    key = f"{sf}|<{C._FOLD_BOUNDARY}|en"
-    assert key in C._QUALITY_FOLD_MEMO, "query path must memoize the fold fit"
-    # eval query shares the SAME memo entry (one fit for the pair)
     via_eval = engine.QUERIES["x26_heldout_eval"](spark, sf).collect()
     fresh_eval = C.quality_heldout_eval(load(spark, sf, "documents")).collect()
     assert [tuple(r) for r in via_eval] == [tuple(r) for r in fresh_eval]
 
     docs = load(spark, sf, "documents")
     target = F.col("lang") == "en"
-    _, held = C._heldout_split(docs)
-    w = C._QUALITY_FOLD_MEMO[key]
+    _, held = heldout_split(docs)
+    w = C._train_fold_model(spark, sf, docs)  # the weights both queries used
     scored = (
         held.select("doc_id", target.cast("long").alias("label"))
         .join(
@@ -611,13 +609,12 @@ def test_x26_heldout_eval_planted_and_corpus(spark):
     assert 0.30 <= acc <= 0.80, acc
 
 
-def test_t1b_heldout_memo_is_value_identical_to_fresh_fit(spark):
+def test_t1b_heldout_memo_is_value_identical_to_fresh_fit(spark, monkeypatch):
     """The registered held-out eval and confusion queries share one
-    train-fold fit via the session memo (they previously refit the
-    identical model). Honesty check: the memoized results must equal a
-    fresh unmemoized fit row-for-row — the memo may only change the
-    wall, never a value — and ad-hoc frames (no memo key) must never
-    hit the memo."""
+    train-fold fit (they previously refit the identical model).
+    Honesty check: the shared-fit results must equal a fresh fit
+    row-for-row — sharing may only change the wall, never a value —
+    and a library call without a model always fits its own frame."""
     from real_time_event_streaming_analytics_platform_spark.functions import langid
 
     sf = "/root/testdata/sf0.001"
@@ -628,9 +625,6 @@ def test_t1b_heldout_memo_is_value_identical_to_fresh_fit(spark):
         tuple(r)
         for r in engine.QUERIES["t1b_heldout_confusion"](spark, sf).collect()
     ]
-    # the query path memoizes under sf_dir + the fold-boundary token
-    # (ADVICE r12: the key must uniquely determine the train fold)
-    assert f"{sf}|<cc" in langid._TRAIN_FOLD_MODEL_MEMO
     docs = load(spark, sf, "documents")
     assert via_query_eval == [
         tuple(r) for r in langid.langid_heldout_eval(docs).collect()
@@ -638,10 +632,101 @@ def test_t1b_heldout_memo_is_value_identical_to_fresh_fit(spark):
     assert via_query_conf == [
         tuple(r) for r in langid.langid_heldout_confusion(docs).collect()
     ]
-    # planted fixtures pass no key: the memo must not leak across frames
-    n_keys = len(langid._TRAIN_FOLD_MODEL_MEMO)
+    fits = _count_calls(monkeypatch, langid, "langid_model")
     langid.langid_heldout_eval(_three_alphabet_docs(spark)).collect()
-    assert len(langid._TRAIN_FOLD_MODEL_MEMO) == n_keys
+    assert fits == [1]
+
+
+def _count_calls(monkeypatch, module, name):
+    """Wrap ``module.name`` to count its calls; returns the 1-item counter."""
+    n = [0]
+    fn = getattr(module, name)
+
+    def counted(*a, **k):
+        n[0] += 1
+        return fn(*a, **k)
+
+    monkeypatch.setattr(module, name, counted)
+    return n
+
+
+def _write_two_vocab_corpus(spark, sf_dir, swap):
+    """Write ``_two_vocab_docs`` as ``sf_dir``'s documents table; with
+    ``swap`` the two vocabularies trade labels (en <-> de)."""
+    import os
+
+    docs = _two_vocab_docs(spark, n_per=40, probes=False)
+    if swap:
+        docs = docs.withColumn(
+            "lang", F.when(F.col("lang") == "en", "de").otherwise("en")
+        )
+    docs.write.mode("overwrite").parquet(os.path.join(sf_dir, "documents.parquet"))
+
+
+def test_heldout_models_fit_once_per_corpus_and_refit_on_rewrite(
+    spark, tmp_path, monkeypatch
+):
+    """Each registered held-out pair (t1b eval + confusion, x26 eval +
+    threshold curve) fits its train-fold model once per corpus. When
+    documents.parquet is rewritten at the same path with swapped labels,
+    the queries refit and equal a fresh library call on the new corpus
+    — a stale model would score the new held fold with the old labels'
+    weights."""
+    from real_time_event_streaming_analytics_platform_spark.functions import classifier as C
+    from real_time_event_streaming_analytics_platform_spark.functions import langid
+
+    sf = str(tmp_path)
+    lang_fits = _count_calls(monkeypatch, langid, "langid_model")
+    lr_fits = _count_calls(monkeypatch, C, "fit_quality_lr")
+    fresh_by_corpus = []
+    for swap in (False, True):
+        _write_two_vocab_corpus(spark, sf, swap)
+        lang_fits[0] = lr_fits[0] = 0
+        got = {
+            name: [tuple(r) for r in engine.QUERIES[name](spark, sf).collect()]
+            for name in (
+                "t1b_heldout_eval",
+                "t1b_heldout_confusion",
+                "x26_heldout_eval",
+                "x26b_threshold_curve",
+            )
+        }
+        assert (lang_fits, lr_fits) == ([1], [1]), swap
+        docs = load(spark, sf, "documents")
+        fresh = {
+            "t1b_heldout_eval": langid.langid_heldout_eval(docs),
+            "x26_heldout_eval": C.quality_heldout_eval(docs),
+        }
+        fresh = {k: [tuple(r) for r in v.collect()] for k, v in fresh.items()}
+        for name, rows in fresh.items():
+            assert got[name] == rows, (swap, name)
+        fresh_by_corpus.append(fresh)
+    # the swap must change both answers, or the equality above is vacuous
+    for name in fresh_by_corpus[0]:
+        assert fresh_by_corpus[0][name] != fresh_by_corpus[1][name], name
+
+
+def test_clear_derived_drops_models_and_tables(spark, tmp_path, monkeypatch):
+    """clear_derived() forgets the train-fold models as well as the
+    derived tables: after it, the next use refits and rebuilds."""
+    from real_time_event_streaming_analytics_platform_spark.catalog import clear_derived
+    from real_time_event_streaming_analytics_platform_spark.functions import langid
+    from real_time_event_streaming_analytics_platform_spark.functions.dedup import (
+        signature_index,
+    )
+
+    sf = str(tmp_path)
+    _write_two_vocab_corpus(spark, sf, swap=False)
+    fits = _count_calls(monkeypatch, langid, "langid_model")
+    engine.QUERIES["t1b_heldout_eval"](spark, sf)
+    sig_files = signature_index(spark, sf).inputFiles()
+    engine.QUERIES["t1b_heldout_eval"](spark, sf)
+    assert signature_index(spark, sf).inputFiles() == sig_files
+    assert fits == [1]
+    clear_derived()
+    engine.QUERIES["t1b_heldout_eval"](spark, sf)
+    assert fits == [2]
+    assert set(signature_index(spark, sf).inputFiles()).isdisjoint(sig_files)
 
 
 def test_heldout_evals_rise_with_graded_content_signal(spark):

@@ -799,7 +799,7 @@ def test_x9_source_mixing_rates(spark):
 def test_t6_repetition_bounds_and_planted_boilerplate(spark):
     """Fractions stay in [0,1]; a degenerate one-token document is
     flagged, a all-distinct document is not."""
-    from real_time_event_streaming_analytics_platform_spark.functions import text as T
+    from real_time_event_streaming_analytics_platform_spark._shingle import WORDS_EXPR
 
     docs = spark.createDataFrame(
         [
@@ -811,7 +811,7 @@ def test_t6_repetition_bounds_and_planted_boilerplate(spark):
     # reuse the registered query's projection by calling it over a temp dir
     # is overkill — drive the same expressions directly
     base = (
-        docs.withColumn("_toks", F.expr(T._TOK_SPARK))
+        docs.withColumn("_toks", F.expr(WORDS_EXPR))
         .select(
             "doc_id",
             F.expr("size(_toks)").alias("n_tokens"),
@@ -968,16 +968,16 @@ def test_x2f_incremental_flags_cross_side_dups_only(spark):
     try:
         catalog.load = lambda _s, _d, _t: planted  # noqa: ARG005
         dd.load = catalog.load
-        # the standing-index memos are keyed by the REAL corpus files;
+        # the standing indexes are keyed by the REAL corpus files;
         # clear on both sides of the loader swap so this test neither
         # reads a pre-built real-corpus index nor leaves a planted one
         # behind for later tests
-        dd.clear_index_caches()
+        catalog.clear_derived()
         out = {r["doc_id"]: r for r in dd.x2f_incremental_dedup(spark, SF_DIR).collect()}
     finally:
         catalog.load = orig
         dd.load = orig
-        dd.clear_index_caches()
+        catalog.clear_derived()
     assert 999997 in out and out[999997]["first_match"] == 4
     assert 999987 not in out  # unique batch doc not flagged
     assert all(d % 10 == 7 for d in out)  # only batch-side docs in the output
@@ -1638,6 +1638,39 @@ def test_x17b_approx_quartile_agrees_with_exact_ntile(spark):
     assert set(approx.values()) == {1, 2, 3, 4}
     plan = approx_df._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan, plan[:1500]
+
+
+def test_x17b_consume_reuses_the_per_doc_frame_the_cuts_read(spark):
+    """x17b computes its approxQuantile cuts at build time from the
+    per-document surprisal frame, which it persists: consuming the
+    returned plan reads that frame instead of re-running the tokenize →
+    count → join → aggregate pipeline, so it runs fewer Spark jobs than
+    the build did (recomputing it runs exactly as many)."""
+    import os
+
+    import real_time_event_streaming_analytics_platform_spark as engine
+
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, "x17b job count")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    df, built = jobs(
+        "x17b-build",
+        lambda: engine.QUERIES["x17b_surprisal_quartile_approx"](
+            spark, os.path.join(os.path.dirname(SF_DIR), "sf0.001")
+        ),
+    )
+    _, consumed = jobs(
+        "x17b-consume",
+        lambda: df.write.format("noop").mode("overwrite").save(),
+    )
+    assert 0 < consumed < built, (built, consumed)
 
 
 def test_x19b_capped_bigram_matches_duckdb_recompute(spark):
