@@ -11,8 +11,9 @@ vector, so the iteration is distributed:
   deterministic TakeOrdered job; the driver receives k×dim floats,
   constant in the corpus size.
 - **assign**: one Arrow-batched pandas-UDF scan; the centroid matrix
-  rides in the UDF closure (k×dim floats) and each batch does a single
-  ``||c||² − 2·X@Cᵀ`` matmul argmin. No shuffle.
+  rides in the UDF closure (k×dim floats) and each batch routes its
+  rows with ``similarity.nearest`` — the one nearest-centroid function
+  the IVF/PQ family uses too. No shuffle.
 - **update**: the same pass reduces each partition to per-cluster sums
   and counts (k×(dim+1) doubles, never rows), summed by
   ``partials.sum_partials``. The driver divides, computes the max
@@ -23,9 +24,10 @@ the canonical Spark k-means shape. Each iteration builds a fresh plan
 from the base frame (the only cross-iteration state is the centroid
 ndarray on the driver), so lineage depth stays constant and no
 checkpointing is needed. Empty clusters keep their previous center;
-argmin ties break to the lowest cluster index (numpy argmin order) —
-both rules identical to the driver-side ``_lloyd`` so small-data fits
-agree with the sample-trained path.
+ties go to the lowest cluster index. Both rules are the driver-side
+``similarity._lloyd``'s, and both modules route through the same
+``similarity.nearest``, so small-data fits agree with the sample-trained
+path.
 
 Reference parity: the reference has no clustering surface; this extends
 the LLM-pipeline toolkit (SURVEY.md §2c) where cluster-conditioned
@@ -44,30 +46,11 @@ from ..catalog import load
 from ..plans.registry import query
 from ..operators.helpers import round2
 from .partials import sum_partials
+from .similarity import nearest, nearest_cells
 
 KMEANS_K = 8
 KMEANS_MAX_ITERS = 10
 KMEANS_TOL = 1e-4
-
-
-def _assign(emb: DataFrame, centers) -> DataFrame:
-    """Nearest-centroid assignment under fixed centers (one Arrow matmul
-    per batch; same kernel as similarity.assign_cells, kept local so the
-    two modules' closures stay independently versioned)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centers, dtype=np.float64)
-    c_sq = (C**2).sum(axis=1)
-
-    @pandas_udf("int")
-    def _cell(col: pd.Series) -> pd.Series:
-        M = np.array(col.tolist(), dtype=np.float64)
-        return pd.Series(
-            (c_sq[None, :] - 2.0 * (M @ C.T)).argmin(axis=1).astype("int32")
-        )
-
-    return emb.withColumn("cluster", _cell("embedding"))
 
 
 def kmeans_fit(
@@ -108,14 +91,13 @@ def kmeans_fit(
     it = 0
     for it in range(1, max_iters + 1):
         Cb = C.copy()
-        c_sq = (Cb**2).sum(axis=1)
 
         def _partial(batches):
             S = np.zeros((k, dim))
             N = np.zeros(k)
             for pdf in batches:
                 M = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-                a = (c_sq[None, :] - 2.0 * (M @ Cb.T)).argmin(axis=1)
+                a = nearest(M, Cb)
                 for j in np.unique(a):
                     m = a == j
                     S[j] += M[m].sum(axis=0)
@@ -146,14 +128,13 @@ def x21_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     C, _ = kmeans_fit(emb.select("vec_id", "embedding"))
-    c_sq = (np.asarray(C) ** 2).sum(axis=1)
 
     # Both profile passes (rms-distance agg and majority-label window)
     # read the assignment; persisting it runs the Arrow assign scan once
     # instead of once per subtree.
     from ..plans.registry import track_persist
 
-    assigned = track_persist(_assign(emb, C))
+    assigned = track_persist(emb.withColumn("cluster", nearest_cells("embedding", C)))
     # ||x - c||² = ||x||² + ||c||² - 2 x·c ; recompute the distance via
     # the same closure-shipped centroid matrix, JVM-free only in the
     # Arrow batch (one einsum per batch).

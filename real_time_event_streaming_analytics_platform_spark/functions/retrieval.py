@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .._shingle import WORDS_EXPR
 from ..catalog import load
 from ..plans.registry import query, track_persist
 
@@ -344,8 +345,6 @@ def x17b_surprisal_quartile_approx(spark: SparkSession, sf_dir: str) -> DataFram
 # prior, the standard choice when the model is self-estimated.
 _BIGRAM_K = 0.5
 
-_WORDS_SQL = f"filter(split(lower(trim(text)), '{_TOKEN_SPLIT}'), w -> w != '')"
-
 
 def _adjacent_pairs(bound: DataFrame) -> DataFrame:
     """(doc_id, w1, w2) — one row per adjacent token pair, from a frame
@@ -422,7 +421,7 @@ def x19_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ReusedExchange can fire across those differently-shaped parents.
     # Tokenize+pair-explode now run once each instead of twice.
     bound = track_persist(
-        docs.select("doc_id", F.expr(_WORDS_SQL).alias("_ws"))
+        docs.select("doc_id", F.expr(WORDS_EXPR).alias("_ws"))
     )
     pairs = track_persist(_adjacent_pairs(bound))
     bc = pairs.groupBy("w1", "w2").agg(F.count("*").alias("c2"))
@@ -506,7 +505,7 @@ def bigram_surprisal_capped(docs: DataFrame, vocab_size: int = X19B_VOCAB) -> Da
     bigram-count chain AND the scoring join. Persisting them runs
     tokenize / vocab-mapping once each instead of twice."""
     bound = track_persist(
-        docs.select("doc_id", F.expr(_WORDS_SQL).alias("_ws"))
+        docs.select("doc_id", F.expr(WORDS_EXPR).alias("_ws"))
     )
     pairs = _adjacent_pairs(bound)
     cnt = (
@@ -621,7 +620,7 @@ def bigram_table_stats(docs: DataFrame, vocab_size: int = X19B_VOCAB) -> dict:
     the session band, but the table sizes are exact counts a reader can
     re-derive, and the table size is what decides broadcastability and
     spill at 100 TB."""
-    bound = docs.withColumn("_ws", F.expr(_WORDS_SQL))
+    bound = docs.withColumn("_ws", F.expr(WORDS_EXPR))
     pairs = _adjacent_pairs(bound)
     cnt = (
         bound.select(F.explode("_ws").alias("t"))

@@ -19,6 +19,13 @@ candidate scoring) uses Arrow-batched pandas UDFs doing one numpy
 matmul/einsum per batch — the vectorized exception the scale doctrine
 allows, ~10-100× the interpreted higher-order-function folds they
 replaced.
+
+The vector-quantizer family (x3c IVF, x3d PQ, x3e IVFADC, x3f, x15, x27
+and clustering.py's k-means) shares one core: ``nearest`` is the only
+nearest-centroid decision (Lloyd steps, cell assignment, probe sets, PQ
+codes), ``_train_sample`` the only quantizer training sample, and
+``ivfadc_probe`` the only ADC scan — x3d is its one-cell, zero-centroid
+case.
 """
 
 from __future__ import annotations
@@ -368,17 +375,63 @@ IVF_TRAIN_MAX = 4096  # quantizer training sample cap
 IVF_ITERS = 10
 
 
+def nearest(M, C, n: int | None = None):
+    """The quantizer family's one routing decision: for each row of
+    ``M``, the index of the nearest row of ``C`` in squared L2 — or,
+    given ``n``, the (len(M), n) indices of the n nearest, nearest
+    first. Distances take the short form ``||c||² − 2·m·c`` (``||m||²``
+    is the same for every centroid, so it cannot move the ranking): an
+    n×k matrix, never an n×k×dim difference tensor. Ties go to the
+    lowest index — argmin's first hit, or a stable argsort."""
+    import numpy as np
+
+    d = (C**2).sum(axis=1)[None, :] - 2.0 * (M @ C.T)
+    if n is None:
+        return d.argmin(axis=1)
+    return np.argsort(d, axis=1, kind="stable")[:, :n]
+
+
+def nearest_cells(col, centers, n: int | None = None):
+    """Column form of ``nearest`` over an array<float> column: one Arrow
+    matmul per batch, the centroid matrix riding to executors in the UDF
+    closure (k×dim floats). An int per row, or with ``n`` an array<int>
+    of the n nearest."""
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
+
+    C = np.asarray(centers, dtype=np.float64)
+
+    @pandas_udf("int" if n is None else "array<int>")
+    def _near(s: pd.Series) -> pd.Series:
+        ix = nearest(np.array(s.tolist(), dtype=np.float64), C, n).astype("int32")
+        return pd.Series(ix if n is None else list(ix))
+
+    return _near(col)
+
+
+def _train_sample(emb: DataFrame):
+    """The quantizer training sample: the ``IVF_TRAIN_MAX`` vectors with
+    the smallest xxhash64(vec_id) as a float64 matrix — one TakeOrdered
+    pass, deterministic and size-capped whatever the corpus size."""
+    import numpy as np
+
+    rows = (
+        emb.select("embedding")
+        .orderBy(F.xxhash64("vec_id"))
+        .limit(IVF_TRAIN_MAX)
+        .collect()
+    )
+    return np.array([r["embedding"] for r in rows], dtype=np.float64)
+
+
 def _lloyd(X, k: int, iters: int):
     """Deterministic numpy Lloyd iterations; init = first k sample rows
     (the sample is already hash-shuffled). Empty cells keep their old
-    center. Ties in argmin break to the lowest cell index."""
-    import numpy as np
-
+    center; ties go to the lowest cell index (``nearest``)."""
     k = min(k, len(X))
     C = X[:k].copy()
     for _ in range(iters):
-        d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        a = d.argmin(axis=1)
+        a = nearest(X, C)
         for j in range(k):
             m = a == j
             if m.any():
@@ -388,48 +441,25 @@ def _lloyd(X, k: int, iters: int):
 
 def assign_cells(emb: DataFrame, centers) -> DataFrame:
     """Assign each vector to its nearest coarse cell under FIXED
-    centroids: one Arrow matmul per batch (the centroid matrix rides to
-    executors in the UDF closure — nlist×dim floats), touching ONLY the
-    rows of ``emb``. This is both the build-time corpus scan and the
-    incremental-ingest admit step (x3f): FAISS ``IndexIVF.add`` is the
-    same operation."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centers, dtype=np.float64)
-    c_sq = (C**2).sum(axis=1)  # argmin ||x-c||^2 == argmin ||c||^2 - 2 x.c
-
-    @pandas_udf("int")
-    def _cell(col: pd.Series) -> pd.Series:
-        M = np.array(col.tolist(), dtype=np.float64)
-        scores = c_sq[None, :] - 2.0 * (M @ C.T)
-        return pd.Series(scores.argmin(axis=1).astype("int32"))
-
-    return emb.select("vec_id", "embedding", "nrm", _cell("embedding").alias("cell"))
+    centroids (``nearest_cells``), touching ONLY the rows of ``emb``.
+    This is both the build-time corpus scan and the incremental-ingest
+    admit step (x3f): FAISS ``IndexIVF.add`` is the same operation."""
+    return emb.select(
+        "vec_id", "embedding", "nrm", nearest_cells("embedding", centers).alias("cell")
+    )
 
 
 def ivf_assignments(emb: DataFrame, nlist: int = None):
     """Fit the coarse quantizer and return (assigned_df, centers).
 
-    Build shape for 100 TB: training collects at most ``IVF_TRAIN_MAX``
-    hash-sampled vectors to the driver (TakeOrdered over xxhash64 — one
-    pass, deterministic, size-capped regardless of corpus size) and runs
-    Lloyd there in microseconds; the corpus-wide work is a single
+    Build shape for 100 TB: Lloyd runs on the driver over the size-capped
+    ``_train_sample`` in microseconds; the corpus-wide work is a single
     Arrow-batched pandas-UDF scan assigning each vector to its nearest
     center via one matmul per batch (``assign_cells``). No multi-pass
     distributed fit, no MLlib JIT, nothing grows with the corpus except
     the one scan.
     """
-    import numpy as np
-
-    sample = (
-        emb.select("vec_id", "embedding")
-        .orderBy(F.xxhash64("vec_id"))
-        .limit(IVF_TRAIN_MAX)
-        .collect()
-    )
-    X = np.array([r["embedding"] for r in sample], dtype=np.float64)
-    C = _lloyd(X, nlist if nlist is not None else IVF_NLIST, IVF_ITERS)
+    C = _lloyd(_train_sample(emb), nlist if nlist is not None else IVF_NLIST, IVF_ITERS)
     return assign_cells(emb, C), list(C)
 
 
@@ -441,21 +471,20 @@ def ivf_probe(spark: SparkSession, assigned: DataFrame, centers) -> DataFrame:
     from per-query probe cost. ``assigned`` may be persisted by the
     caller; this function only reads it.
     """
-    from pyspark.sql import Window
+    import numpy as np
 
     # nprobe nearest cells per query vector — centers are tiny (nlist×dim),
     # so this is driver-side numpy over the collected probe vectors only.
-    import numpy as np
-
     qrows = assigned.where(F.col("vec_id") < N_QUERIES).collect()
-    cmat = np.array([c.toArray() if hasattr(c, "toArray") else c for c in centers])
-    probe_rows = []
-    for r in qrows:
-        q = np.array(r["embedding"], dtype=np.float64)
-        d = ((cmat - q) ** 2).sum(axis=1)
-        for cell in np.argsort(d)[:IVF_NPROBE]:
-            probe_rows.append((r["vec_id"], int(cell)))
-    probes = spark.createDataFrame(probe_rows, "qid long, cell int")
+    C = np.asarray(centers, dtype=np.float64)
+    # (0, dim) when no probe vector is present: no probes, no rows
+    Q = np.array([r["embedding"] for r in qrows], dtype=np.float64)
+    Q = Q.reshape(-1, C.shape[1])
+    cells = nearest(Q, C, IVF_NPROBE)
+    probes = spark.createDataFrame(
+        [(r["vec_id"], int(c)) for r, row in zip(qrows, cells) for c in row],
+        "qid long, cell int",
+    )
 
     q = assigned.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"),
@@ -472,6 +501,7 @@ def ivf_probe(spark: SparkSession, assigned: DataFrame, centers) -> DataFrame:
     )
     scored = cand.select("qid", F.col("vec_id").alias("cid"), cos)
     return _topk_ranked(scored)
+
 
 @query("x3c_ann_ivf")
 def x3c_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -522,8 +552,7 @@ def x3f_incremental_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # PQ_M×PQ_K true sub-dot-products per query, built driver-side in
 # microseconds), and only the top PQ_RERANK approximate hits per query are
 # re-scored exactly against their full vectors. Composes with x3c's cell
-# routing (classic IVFADC) — kept separate here so each index structure is
-# independently testable.
+# routing (classic IVFADC); x3d is the one-cell case of x3e's ADC scan.
 # ---------------------------------------------------------------------------
 
 PQ_M = 8  # subspaces (64-dim → 8 dims each)
@@ -545,32 +574,28 @@ def pq_train(X):
     )
 
 
-def _pq_argmin_codes(M, books, b_sq):
-    """(B, PQ_M) int32 codes: per-subspace nearest-centroid argmin, ties
-    to the lowest code — the single encode kernel shared by plain PQ
-    (x3d) and residual IVFADC (x3e)."""
+def _pq_codes(M, books):
+    """(B, PQ_M) int32 codes: per subspace, the ``nearest`` codebook
+    centroid — the single encode kernel shared by plain PQ (x3d) and
+    residual IVFADC (x3e)."""
     import numpy as np
 
     sub = books.shape[2]
-    out = np.empty((len(M), PQ_M), dtype="int32")
-    for m in range(PQ_M):
-        S = M[:, m * sub : (m + 1) * sub]
-        out[:, m] = (b_sq[m][None, :] - 2.0 * (S @ books[m].T)).argmin(axis=1)
-    return out
+    return np.stack(
+        [nearest(M[:, m * sub : (m + 1) * sub], books[m]) for m in range(PQ_M)], axis=1
+    ).astype("int32")
 
 
 def pq_encode(emb: DataFrame, books) -> DataFrame:
     """(vec_id, nrm, codes array<int>[PQ_M]) — one Arrow-batched numpy
-    pass; ties in the per-subspace argmin break to the lowest code."""
+    pass; ties in the per-subspace routing break to the lowest code."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
-
-    b_sq = (books**2).sum(axis=2)  # (M, K)
 
     @pandas_udf("array<int>")
     def _codes(col: pd.Series) -> pd.Series:
         M = np.array(col.tolist(), dtype=np.float64)
-        return pd.Series(list(_pq_argmin_codes(M, books, b_sq)))
+        return pd.Series(list(_pq_codes(M, books)))
 
     return emb.select("vec_id", "nrm", _codes("embedding").alias("codes"))
 
@@ -611,82 +636,19 @@ def x3d_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ-ADC top-k: approx dot from codes + lookup tables, exact cosine
     re-rank of the top PQ_RERANK. Same output shape as x3; recall vs the
     brute-force oracle asserted in tests/test_functions.py. Rows-only (the
-    codebooks are driver-trained numpy state no SQL engine reproduces)."""
+    codebooks are driver-trained numpy state no SQL engine reproduces).
+
+    Scored by ``ivfadc_probe``'s scan as its one-cell, zero-centroid
+    case: every vector sits in cell 0, every query probes it, and
+    <q, c> = 0, so the score is plain PQ's Σ_m T[q, m, code_m] / norms."""
     import numpy as np
-    from pyspark.sql import Window
 
     emb = with_norm(load(spark, sf_dir, "embeddings"))
-    sample = (
-        emb.select("embedding")
-        .orderBy(F.xxhash64("vec_id"))
-        .limit(IVF_TRAIN_MAX)
-        .collect()
-    )
-    books = pq_train(np.array([r["embedding"] for r in sample], dtype=np.float64))
-    sub = books.shape[2]
-
-    # the PQ index: codes + norms, 100× smaller than the vectors; scanned
-    # by the ADC pass and (by ids only) the re-rank join
-    encoded = track_persist(pq_encode(emb, books))
-
-    qrows = sorted(
-        emb.where(F.col("vec_id") < N_QUERIES).collect(), key=lambda r: r["vec_id"]
-    )
-    qids = [int(r["vec_id"]) for r in qrows]
-    Q = np.array([r["embedding"] for r in qrows], dtype=np.float64)
-    qnrm = np.array([r["nrm"] for r in qrows])
-    # ADC tables: T[q, m, k] = <query_q subspace m, codebook centroid k>
-    T = np.stack(
-        [Q[:, m * sub : (m + 1) * sub] @ books[m].T for m in range(PQ_M)], axis=1
-    )
-
-    # Map-side top-k (r14, guide §2.3): the old shape exploded the ADC
-    # score array to one JVM row per (candidate, query) — corpus × Q
-    # rows shuffled into the global rank window. The ADC kernel now
-    # selects each batch's per-query top-PQ_RERANK itself (top-R of a
-    # union of per-batch top-Rs == global top-R under the same total
-    # order, so the shortlist is bit-identical), and the window ranks
-    # only batches × Q × PQ_RERANK tiny rows.
-    qid_np = np.array(qids, dtype=np.int64)
-
-    def _adc_topk(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            C = np.array(pdf["codes"].tolist(), dtype=np.int64)  # (B, M)
-            ids_b = pdf["vec_id"].to_numpy(dtype=np.int64)
-            nrm_b = pdf["nrm"].to_numpy(dtype=np.float64)
-            acc = np.zeros((len(C), len(qids)))
-            for m in range(PQ_M):
-                acc += T[:, m, C[:, m]].T  # (B, Q)
-            S = acc / (qnrm[None, :] * nrm_b[:, None])
-            S[ids_b[:, None] == qid_np[None, :]] = -np.inf  # self-pairs out
-            out_q, out_c, out_s = [], [], []
-            for qi in range(len(qids)):
-                col = S[:, qi]
-                order = np.lexsort((ids_b, -col))[:PQ_RERANK]
-                order = order[np.isfinite(col[order])]
-                out_q.append(np.full(len(order), qids[qi], dtype=np.int64))
-                out_c.append(ids_b[order])
-                out_s.append(col[order])
-            yield pd.DataFrame(
-                {
-                    "qid": np.concatenate(out_q),
-                    "cid": np.concatenate(out_c),
-                    "approx_cos": np.concatenate(out_s),
-                }
-            )
-
-    scored = encoded.mapInPandas(
-        _adc_topk, "qid long, cid long, approx_cos double"
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("approx_cos").desc(), "cid")
-    shortlist = (
-        scored.withColumn("arank", F.row_number().over(w))
-        .where(F.col("arank") <= PQ_RERANK)
-        .select("qid", "cid")
-    )
-    return rerank_exact(shortlist, emb)
+    X = _train_sample(emb)
+    books = pq_train(X)
+    # the PQ index: codes + norms, 100× smaller than the vectors
+    encoded = track_persist(pq_encode(emb, books)).withColumn("cell", F.lit(0))
+    return ivfadc_probe(spark, encoded, np.zeros((1, X.shape[1])), books, emb)
 
 
 # ---------------------------------------------------------------------------
@@ -714,25 +676,15 @@ def ivfadc_index(emb: DataFrame):
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    sample = (
-        emb.select("embedding")
-        .orderBy(F.xxhash64("vec_id"))
-        .limit(IVF_TRAIN_MAX)
-        .collect()
-    )
-    X = np.array([r["embedding"] for r in sample], dtype=np.float64)
+    X = _train_sample(emb)
     C = _lloyd(X, IVF_NLIST, IVF_ITERS)
-    c_sq = (C**2).sum(axis=1)
-    cells = (c_sq[None, :] - 2.0 * (X @ C.T)).argmin(axis=1)
-    books = pq_train(X - C[cells])  # residual codebooks
-    sub = books.shape[2]
-    b_sq = (books**2).sum(axis=2)  # (M, K)
+    books = pq_train(X - C[nearest(X, C)])  # residual codebooks
 
     @pandas_udf("struct<cell:int, codes:array<int>>")
     def _index(col: pd.Series) -> pd.DataFrame:
         M = np.array(col.tolist(), dtype=np.float64)
-        cell = (c_sq[None, :] - 2.0 * (M @ C.T)).argmin(axis=1)
-        codes = _pq_argmin_codes(M - C[cell], books, b_sq)
+        cell = nearest(M, C)
+        codes = _pq_codes(M - C[cell], books)
         return pd.DataFrame({"cell": cell.astype("int32"), "codes": list(codes)})
 
     idx = emb.select("vec_id", "nrm", _index("embedding").alias("ix")).select(
@@ -756,7 +708,9 @@ def x3e_ann_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivfadc_probe(spark: SparkSession, idx: DataFrame, C, books, emb: DataFrame) -> DataFrame:
     """IVFADC search given a built index — split from the build so the
     bench can time one-time index construction separately from the
-    per-query probe cost (mirrors ivf_probe for x3c)."""
+    per-query probe cost (mirrors ivf_probe for x3c). The one ADC scan:
+    x3d runs it with a single zero centroid, so every row is probed and
+    the <q, c> term is 0."""
     import numpy as np
     from pyspark.sql import Window
 
@@ -765,21 +719,17 @@ def ivfadc_probe(spark: SparkSession, idx: DataFrame, C, books, emb: DataFrame) 
     qrows = sorted(
         emb.where(F.col("vec_id") < N_QUERIES).collect(), key=lambda r: r["vec_id"]
     )
-    qids = [int(r["vec_id"]) for r in qrows]
+    qid_np = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
     Q = np.array([r["embedding"] for r in qrows], dtype=np.float64)
     qnrm = np.array([r["nrm"] for r in qrows])
-    # per-query ADC tables over the residual codebooks: T[q, m, k]
+    # per-query ADC tables over the (residual) codebooks: T[q, m, k]
     T = np.stack(
         [Q[:, m * sub : (m + 1) * sub] @ books[m].T for m in range(PQ_M)], axis=1
     )
     # nprobe nearest cells per query + the <q, centroid> term of the score
-    d = ((C[None, :, :] - Q[:, None, :]) ** 2).sum(axis=2)  # (Q, nlist)
     qdotc = Q @ C.T
-    nlist = len(C)
-    probed = np.zeros((len(qids), nlist), dtype=bool)
-    for i in range(len(qids)):
-        probed[i, np.argsort(d[i])[:IVF_NPROBE]] = True
-    qid_np = np.array(qids, dtype=np.int64)
+    probed = np.zeros(qdotc.shape, dtype=bool)
+    np.put_along_axis(probed, nearest(Q, C, IVF_NPROBE), True, axis=1)
 
     # Map-side top-k (r14, guide §2.3/§4): the old shape broadcast a
     # (qid, cell) probe table, joined it to the index — one JVM row per
@@ -1062,26 +1012,6 @@ def x27_default_nprobe(nlist: int | None) -> int:
     return min(n, max(X27_NPROBE, n // 4))
 
 
-def _probe_cells(emb: DataFrame, centers, nprobe: int) -> DataFrame:
-    """Append an array of the nprobe nearest cell ids per vector (one
-    Arrow matmul per batch; stable argsort so ties resolve to the
-    lowest cell index on every run)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centers, dtype=np.float64)
-    c_sq = (C**2).sum(axis=1)
-
-    @pandas_udf("array<int>")
-    def _cells(col: pd.Series) -> pd.Series:
-        M = np.array(col.tolist(), dtype=np.float64)
-        d = c_sq[None, :] - 2.0 * (M @ C.T)
-        order = np.argsort(d, axis=1, kind="stable")[:, :nprobe].astype("int32")
-        return pd.Series(list(order))
-
-    return emb.withColumn("probe_cells", _cells("embedding"))
-
-
 def _cell_local_topk(k: int):
     """Per-cell scoring kernel for hard-negative mining: one BLAS
     matmul per (cell, anchor-block) scores every anchor probing the
@@ -1198,12 +1128,12 @@ def hard_negatives_sweep(
     # corpus key either way; at scale the label column would simply be
     # carried in the index table).
     idx = track_persist(assigned.join(emb.select("vec_id", "label"), "vec_id"))
-    a = _probe_cells(idx, centers, nmax).select(
+    a = idx.select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
         F.col("label").alias("q_label"),
-        F.posexplode("probe_cells").alias("pos", "cell"),
+        F.posexplode(nearest_cells("embedding", centers, nmax)).alias("pos", "cell"),
     )
     # cell-local scoring: cogroup anchors-probing-a-cell with the
     # cell's members and run the matmul kernel per cell; only the tiny

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .._shingle import WORDS_EXPR
 from ..catalog import load
 from ..operators.helpers import round2
 from ..plans.registry import query
@@ -42,13 +43,11 @@ from ..plans.registry import query
 N_MERGES = 8
 END_MARK = "</w>"
 
-_WORDS_SQL = "filter(split(lower(trim(text)), '[^a-z0-9]+'), w -> w != '')"
-
 
 def word_freq(docs: DataFrame) -> DataFrame:
     """(word, freq) — the one corpus-sized job of the trainer."""
     return (
-        docs.select(F.explode(F.expr(_WORDS_SQL)).alias("word"))
+        docs.select(F.explode(F.expr(WORDS_EXPR)).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
     )
@@ -183,7 +182,7 @@ def x22_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     _merges, final_syms = bpe_merges_with_state(spark, word_freq(docs))
     words = docs.select(
-        "doc_id", F.explode(F.expr(_WORDS_SQL)).alias("word")
+        "doc_id", F.explode(F.expr(WORDS_EXPR)).alias("word")
     )
     enc = final_syms.select("word", F.size("syms").alias("n_toks"))
     return (

@@ -251,7 +251,6 @@ def kll_sketch_writer(
     key_col: str = "source",
     val_col: str = "metric",
     k: int = 200,
-    run: str | None = None,
 ):
     """foreachBatch incremental KLL materializer — the streaming twin of
     the batch sketch pipeline (functions/sketches.py x13): each
@@ -272,7 +271,7 @@ def kll_sketch_writer(
     the pure (day, epoch) layout had: a stream restarted from a FRESH
     checkpoint (or a second query sharing the path) restarts epoch ids
     at 0 and would silently overwrite previously stored sketches for
-    the same (day, epoch). By default ``run`` is a deterministic
+    the same (day, epoch). ``run`` is a deterministic
     CONTENT SIGNATURE of the epoch's rows: bit_xor of row hashes, PLUS
     a sum of the hashes' upper 32 bits, plus the row count. The xor
     alone cancels rows repeated an even number of times, so two
@@ -283,9 +282,7 @@ def kll_sketch_writer(
     aggregate avoids). A same-checkpoint replay (identical rows) lands
     on the identical partition and overwrites idempotently, while a
     fresh-checkpoint epoch 0 (different rows) gets a different ``run``
-    and APPENDS. Callers may pass an explicit ``run`` (e.g. the
-    streaming query's checkpoint-stable ``id``) to skip the per-batch
-    signature job.
+    and APPENDS.
 
     MIGRATION: this (day, run, epoch) layout is incompatible with a
     store written by the older (day, epoch) writer at the same path —
@@ -300,9 +297,7 @@ def kll_sketch_writer(
     changes — readers merge whatever granularity is stored)."""
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
-        rid = run
-        if rid is None:
-            rid = _batch_run_signature(batch_df, (key_col, "ts", val_col))
+        rid = _batch_run_signature(batch_df, (key_col, "ts", val_col))
         (
             batch_df.groupBy(
                 F.col(key_col).alias("key"), F.to_date("ts").alias("day")
@@ -342,9 +337,7 @@ def kll_store_quantiles(
     return est.select("key", "n", *cols)
 
 
-def shard_export_writer(
-    path: str, run: str | None = None, checkpoint: str | None = None
-):
+def shard_export_writer(path: str, checkpoint: str | None = None):
     """foreachBatch incremental shard exporter — the streaming twin of
     the x30 batch export (functions/pipeline.write_shards): a curated
     document stream is appended to a WebDataset-style K-shard store as
@@ -374,16 +367,16 @@ def shard_export_writer(
       so the store is exactly-once again after the next maintenance
       pass regardless of how the restart overlapped.
 
-    ``run`` resolution, in precedence order: an explicit ``run`` id;
-    a ``checkpoint`` location (the string passed to the query's
-    ``checkpointLocation`` — hashed to a stable id, so every epoch of
-    one checkpointed query shares a run and replay clobbering needs no
-    per-batch job); else a per-batch content signature
-    (``_batch_run_signature``), which costs one tiny aggregate job per
-    batch but needs no wiring."""
+    ``run`` resolution: a ``checkpoint`` location (the string passed to
+    the query's ``checkpointLocation``) is hashed to a stable id, so
+    every epoch of one checkpointed query shares a run and replay
+    clobbering needs no per-batch job; else a per-batch content
+    signature (``_batch_run_signature``), which costs one tiny aggregate
+    job per batch but needs no wiring."""
     from ..functions.pipeline import X30_SHARDS, _sharded
 
-    if run is None and checkpoint is not None:
+    run = None
+    if checkpoint is not None:
         import hashlib
         import os as _os
 

@@ -14,7 +14,9 @@ import real_time_event_streaming_analytics_platform_spark as engine
 from real_time_event_streaming_analytics_platform_spark.functions.clustering import (
     KMEANS_K,
     kmeans_fit,
-    _assign,
+)
+from real_time_event_streaming_analytics_platform_spark.functions.similarity import (
+    nearest_cells,
 )
 
 from .conftest import SF_DIR
@@ -57,7 +59,12 @@ def test_kmeans_recovers_planted_blobs(spark):
     C, iters = kmeans_fit(df, k=3, max_iters=15, tol=1e-6)
     assert iters < 15, "well-separated blobs must converge before the cap"
     # each blob maps to exactly one cluster and vice versa
-    assigned = _assign(df, C).groupBy("blob", "cluster").count().collect()
+    assigned = (
+        df.withColumn("cluster", nearest_cells("embedding", C))
+        .groupBy("blob", "cluster")
+        .count()
+        .collect()
+    )
     blob_to_cluster = {}
     for r in assigned:
         blob_to_cluster.setdefault(r["blob"], set()).add(r["cluster"])

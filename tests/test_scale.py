@@ -190,23 +190,70 @@ def test_x2d_distinct_carries_ids_not_arrays(spark):
 
 
 def test_ivf_assignment_matches_driver_argmin(spark):
-    """The distributed cell-assignment pass must agree exactly with a
-    driver-side numpy argmin against the same centers (ties included)."""
+    """Every distributed routing site must agree exactly with a
+    driver-side numpy argmin over the textbook distance against the same
+    centers (ties included): x3c's cell, x21's k-means cluster and
+    ivfadc_index's cell — and x27's nprobe probe-cell prefix with a
+    stable argsort."""
     import numpy as np
 
+    import real_time_event_streaming_analytics_platform_spark as engine
+    from real_time_event_streaming_analytics_platform_spark.functions.clustering import (
+        kmeans_fit,
+    )
     from real_time_event_streaming_analytics_platform_spark.functions.similarity import (
         ivf_assignments,
+        ivfadc_index,
+        nearest_cells,
         with_norm,
+        x27_default_nprobe,
     )
 
-    emb = with_norm(load(spark, SF_DIR, "embeddings"))
+    raw = load(spark, SF_DIR, "embeddings")
+    emb = with_norm(raw)
     assigned, centers = ivf_assignments(emb)
-    rows = assigned.select("vec_id", "embedding", "cell").collect()
-    C = np.array(centers)
-    for r in rows[:200]:
-        x = np.array(r["embedding"], dtype=np.float64)
-        want = int(((C - x) ** 2).sum(axis=1).argmin())
-        assert r["cell"] == want, (r["vec_id"], r["cell"], want)
+    idx, C_adc, _books = ivfadc_index(emb)
+    C_km, _ = kmeans_fit(raw.select("vec_id", "embedding"))
+    nprobe = x27_default_nprobe(None)
+    # x21 routes every row with nearest_cells under kmeans_fit's centers
+    x21_assigned = raw.withColumn("cell", nearest_cells("embedding", C_km))
+    cases = [
+        ("x3c", assigned, centers, None),
+        ("x21", x21_assigned, C_km, None),
+        ("x3e", idx.join(raw.select("vec_id", "embedding"), "vec_id"), C_adc, None),
+        (
+            "x27",
+            assigned.withColumn("cell", nearest_cells("embedding", centers, nprobe)),
+            centers,
+            nprobe,
+        ),
+    ]
+    for site, frame, centers_, n in cases:
+        rows = frame.select("vec_id", "embedding", "cell").collect()
+        C = np.array(centers_)
+        for r in rows[:200]:
+            x = np.array(r["embedding"], dtype=np.float64)
+            d = ((C - x) ** 2).sum(axis=1)
+            if n is None:
+                want = int(d.argmin())
+            else:
+                want = np.argsort(d, kind="stable")[:n].tolist()
+            assert r["cell"] == want, (site, r["vec_id"], r["cell"], want)
+
+    # the registered x21 query's cluster sizes are those of the same
+    # argmin over the whole corpus
+    X = np.array(
+        [r["embedding"] for r in raw.select("embedding").collect()], dtype=np.float64
+    )
+    want = np.bincount(
+        ((X[:, None, :] - C_km[None, :, :]) ** 2).sum(axis=2).argmin(axis=1),
+        minlength=len(C_km),
+    )
+    got = engine.QUERIES["x21_kmeans_clusters"](spark, SF_DIR).collect()
+    assert {r["cluster"]: r["n_points"] for r in got} == {
+        j: int(c) for j, c in enumerate(want) if c
+    }
+    spark.catalog.clearCache()
 
 
 def test_dedup_consumers_read_materialized_candidate_index(spark):
@@ -370,9 +417,10 @@ def test_index_persists_released_between_queries(spark):
 
 
 def test_x3e_probe_set_broadcasts(spark):
-    """IVFADC scale contract: the (qid, cell) probe routing table and
-    the query vectors broadcast — the corpus-side index is probed in
-    place, never shuffled for the join."""
+    """IVFADC scale contract: probe routing happens inside the map-side
+    ADC kernel, so the corpus-side index is scanned in place and never
+    shuffled for a join; the exact re-rank broadcasts the query vectors
+    and the shortlist side of its corpus join."""
     import real_time_event_streaming_analytics_platform_spark as engine
 
     plan = _formatted_plan(engine.QUERIES["x3e_ann_ivfadc"](spark, SF_DIR))
